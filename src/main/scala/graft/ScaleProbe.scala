@@ -260,19 +260,17 @@ object ScaleProbe {
         .unionAll(coEdges.select(col("v").as("u"), col("u").as("v")))
         .withColumn("w", pmod(col("u") + col("v"), lit(97L)) + lit(1L))
         .repartition(col("u")).persist()
-      var dist = sym.select(col("u")).distinct()
+      val dist0 = sym.select(col("u")).distinct()
         .select(col("u").as("node"),
           when(col("u") === sym.agg(min("u")).head().getLong(0), 0L)
             .otherwise(lit(Long.MaxValue)).as("dd"))
-      for (_ <- 1 to 4) {
+      val dist = graft.engine.Fixpoint.iterate(dist0, 4) { (dist, _) =>
         val relaxed = dist.join(sym, col("node") === col("u"))
           .filter(col("dd") =!= Long.MaxValue)
           .select(col("v").as("node"), (col("dd") + col("w")).as("dd"))
-        val next = graft.engine.Checkpoints.cut(dist.unionByName(relaxed)
-          .groupBy(col("node")).agg(min(col("dd")).as("dd")))
-        graft.engine.Checkpoints.release(dist)
-        dist = next
-      }
+        dist.unionByName(relaxed)
+          .groupBy(col("node")).agg(min(col("dd")).as("dd"))
+      }.state
       val n = dist.filter(col("dd") =!= Long.MaxValue).count()
       sym.unpersist(); n
     })
@@ -1065,23 +1063,18 @@ object ScaleProbe {
         .select(col("e_src"), col("e_dst"), col("d"))
         .repartition(col("e_src"))
         .persist()
-      var ranks = outdeg.select(col("o_src").as("node"),
+      val ranks0 = outdeg.select(col("o_src").as("node"),
         lit(graft.operators.PageRank.Scale).as("r"))
-      var lastCut: org.apache.spark.sql.DataFrame = null
-      for (_ <- 1 to 3) {
-        val contribs = ranks
+      val ranks = graft.engine.Fixpoint.iterate(ranks0, 3) { (ranks, _) =>
+        ranks
           .join(ew, col("node") === col("e_src"))
           .select(col("e_dst").as("node2"), expr("r div d").as("c"))
-        val plan = contribs.groupBy(col("node2"))
+          .groupBy(col("node2"))
           .agg(sum(col("c")).as("s"))
           .select(col("node2").as("node"),
             (lit(15L * graft.operators.PageRank.Scale / 100) +
               expr("(85 * s) div 100")).as("r"))
-        val next = graft.engine.Checkpoints.cut(plan)
-        if (lastCut != null) graft.engine.Checkpoints.release(lastCut)
-        lastCut = next
-        ranks = next
-      }
+      }.state
       ew.unpersist()
       val out = ranks.count()
       graft.engine.Checkpoints.release(ranks)

@@ -20,11 +20,11 @@ import org.apache.spark.storage.StorageLevel
   *    path; survives executor loss, costs a write+read per round).
   *
   * Both are eager, so the caller's "materialize the round here" intent
-  * is identical on either path. Iterative loops should pair each
-  * `cut` with a [[release]] of the PREVIOUS round's cut once the new
-  * round is materialized — without it every round's blocks stay
-  * resident for the whole run and the store holds `rounds ×` the
-  * working set instead of ~2×.
+  * is identical on either path. Round loops go through [[Fixpoint]],
+  * which pairs each `cut` with a [[release]] of the PREVIOUS round's
+  * cut once the new round is materialized — without it every round's
+  * blocks stay resident for the whole run and the store holds
+  * `rounds ×` the working set instead of ~2×.
   */
 object Checkpoints {
   val ConfKey = "graft.checkpoint.dir"

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.{Checkpoints, Fixpoint}
 
 /** Connected components over an undirected edge list — the
   * dedup-clustering primitive: near-dup PAIRS (from
@@ -29,17 +30,14 @@ import org.apache.spark.sql.functions._
   * over their union — no driver-side graph state, no per-round edge
   * exchange. The convergence check rides the SAME job as the round's
   * materialization via `observe()` (an accumulator-backed count of
-  * changed labels) — no extra per-round action.
-  * a per-round lineage cut ([[graft.engine.Checkpoints]]) truncates the plan so round i does not
-  * recompute rounds 1..i-1. Non-convergence within `maxIters` (only
+  * changed labels) — no extra per-round action. A per-round lineage
+  * cut ([[graft.engine.Fixpoint]]) truncates the plan so round i does
+  * not recompute rounds 1..i-1. Non-convergence within `maxIters` (only
   * possible for diameter > 2^maxIters) logs a WARNING rather than
   * returning silently-split components.
   */
 object Components extends org.apache.spark.internal.Logging {
 
-  /** (id, comp) for every node incident to an edge; comp = min node id
-    * reachable in the undirected closure.
-    */
   /** Incremental connected components: fold DELTA edges into a prior
     * (id, comp) labeling without re-exploring the base graph's
     * structure — each prior component collapses to one (id — comp)
@@ -56,6 +54,9 @@ object Components extends org.apache.spark.internal.Logging {
         .unionByName(deltaEdges.select(col(aCol), col(bCol))),
       aCol, bCol, maxIters)
 
+  /** (id, comp) for every node incident to an edge; comp = min node id
+    * reachable in the undirected closure.
+    */
   def connectedComponents(edges: DataFrame, aCol: String, bCol: String,
       maxIters: Int = 20): DataFrame = {
     // The edge list is pinned on `dst` ONCE: every round's neighbor
@@ -69,16 +70,14 @@ object Components extends org.apache.spark.internal.Logging {
       .unionByName(edges.select(col(bCol).as("src"), col(aCol).as("dst")))
       .distinct()
       .repartition(col("dst"))
-      .transform(graft.engine.Checkpoints.cut)
-    var labels = sym.select(col("src").as("id")).distinct()
+      .transform(Checkpoints.cut)
+    val labels0 = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("comp"))
-      .transform(graft.engine.Checkpoints.cut)
-    var converged = false
-    var i = 0
-    while (!converged && i < maxIters) {
+      .transform(Checkpoints.cut)
+    val r = Fixpoint.iterate(labels0, maxIters) { (labels, i) =>
       // FUSED round (r16): one union-aggregate computes
       //   comp' = min(comp, min neighbor comp, comp's own comp)
-      // and the changed count, replacing the r15 shape's two label
+      // and the changed flag, replacing the r15 shape's two label
       // joins (left-join refresh + pointer-chase join) and their |V|
       // exchanges. The pointer chase follows the PREVIOUS round's
       // labels (label-of-OLD-label, not label-of-refreshed-label), so
@@ -94,7 +93,7 @@ object Components extends org.apache.spark.internal.Logging {
       // node set, so the neighbor lookup IS the pinned edge list with
       // comp = dst — no |V|⋈|E| join in the first round.
       val cand =
-        if (i == 0) sym.select(col("src").as("id"), col("dst").as("comp"),
+        if (i == 1) sym.select(col("src").as("id"), col("dst").as("comp"),
           lit(false).as("is_old"))
         else sym
           .join(labels.select(col("id").as("dst"), col("comp")), "dst")
@@ -105,30 +104,23 @@ object Components extends org.apache.spark.internal.Logging {
       // node ids stays a member id), and `old` keeps every id alive
       // through the union even if a pointer row went missing.
       val ptr =
-        if (i == 0) None
+        if (i == 1) None
         else Some(labels.select(col("comp").as("jk"), col("id"))
           .join(labels.select(col("id").as("jk"), col("comp").as("pcomp")),
             Seq("jk"))
           .select(col("id"), col("pcomp").as("comp"), lit(false).as("is_old")))
-      val unioned = ptr.foldLeft(old.unionByName(cand))(_ unionByName _)
-      val obs = new org.apache.spark.sql.Observation(s"cc_round_$i")
-      val next = unioned
+      ptr.foldLeft(old.unionByName(cand))(_ unionByName _)
         .groupBy(col("id"))
         .agg(min(col("comp")).as("comp"),
           min(when(col("is_old"), col("comp"))).as("_old"))
-        .observe(obs, sum(when(col("comp") =!= col("_old"), 1L)
-          .otherwise(0L)).as("changed"))
-        .select(col("id"), col("comp"))
-        .transform(graft.engine.Checkpoints.cut) // the round's single action
-      graft.engine.Checkpoints.release(labels) // round N-1 label blocks
-      labels = next
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      i += 1
+        .select(col("id"), col("comp"),
+          (col("comp") =!= col("_old")).as(Fixpoint.Changed))
     }
-    if (!converged) logWarning(
+    Checkpoints.release(sym) // the final labels are cut; nothing reads sym
+    if (!r.converged) logWarning(
       s"connectedComponents did not converge in $maxIters rounds " +
         "(graph diameter exceeds 2^maxIters); labels may split components")
-    labels
+    r.state
   }
 
   /** Per-component sizes (the duplicate-cluster manifest). */

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Fixpoint
 
 /** Synchronous label propagation (community detection) over a directed
   * edge list — the deterministic variant: every node starts labeled
@@ -15,13 +16,15 @@ import org.apache.spark.sql.functions._
   *
   * Scale (Pregel-on-DataFrames): the edge list is attached to the loop
   * once, hash-partitioned on `src` and pinned, so each round moves
-  * only the |V|-row label relation. A round is one equi-join plus TWO
-  * map-side-combinable aggregations — count per (node, label), then
-  * argmin_{(-count, label)} per node via `min(struct(...))` — no
-  * window, no sort: the per-node winner reduces inside the shuffle
-  * exactly like a MIN. Lineage is cut per round through
-  * [[graft.engine.Checkpoints]] with the previous round's blocks
-  * released eagerly ([[PageRank]]'s measured-best pattern).
+  * only the |V|-row label relation. A round after the first is one
+  * equi-join plus TWO map-side-combinable aggregations — count per
+  * (node, label), then argmin_{(-count, label)} per node via
+  * `min(struct(...))` — no window, no sort: the per-node winner
+  * reduces inside the shuffle exactly like a MIN. Round 1 skips the
+  * join: the initial labels are the node ids themselves, so its votes
+  * read straight off the pinned edge list. [[graft.engine.Fixpoint]]
+  * cuts the lineage per round and releases the previous round's
+  * blocks.
   *
   * Requires every node to appear as a source (symmetrize first) —
   * community detection is an undirected notion here.
@@ -44,9 +47,8 @@ object Lpa {
       col("dst").cast("long").as("e_dst"))
       .repartition(col("e_src"))
       .persist()
-    var labels = e.select(col("e_src").as("node")).distinct()
-      .select(col("node"), col("node").as("lbl"))
-    var lastCut: DataFrame = null
+    val labels0 = e.select(col("e_src").as("node")).distinct()
+      .select(col("node"), col("node").as("community"))
     // NO convergence check here, deliberately: a [[Components]]-style
     // observe() early exit needs a per-round left join back to the
     // previous labels (the vote relation does not carry them), and the
@@ -56,29 +58,25 @@ object Lpa {
     // moving in round 5, so the exit never fired). Relax/Components
     // keep their exits because there the check rides a join the round
     // pays anyway.
-    for (i <- 1 to iterations) {
-      // round-1 identity shortcut (r16): the initial labels are the
-      // identity over exactly the e_src domain, so the first vote join
-      // IS the pinned edge list with lbl = e_src — no |V|⋈|E| join and
-      // no distinct-node materialization before it.
+    val labels = Fixpoint.iterate(labels0, iterations) { (prev, i) =>
+      // round-1 identity shortcut: the initial labels are the identity
+      // over exactly the e_src domain, so the first vote join IS the
+      // pinned edge list with lbl = e_src — no |V|⋈|E| join and no
+      // distinct-node materialization before it.
       val voteRows =
         if (i == 1) e.select(col("e_dst"), col("e_src").as("lbl"))
-        else labels
+        else prev
           .join(e, col("node") === col("e_src"))
-          .select(col("e_dst"), col("lbl"))
+          .select(col("e_dst"), col("community").as("lbl"))
       val votes = voteRows
         .groupBy(col("e_dst"), col("lbl"))
         .agg(count(lit(1)).as("cnt"))
-      val plan = votes
+      votes
         .groupBy(col("e_dst"))
         .agg(min(struct((-col("cnt")).as("nc"), col("lbl").as("l"))).as("w"))
-        .select(col("e_dst").as("node"), col("w.l").as("lbl"))
-      val next = graft.engine.Checkpoints.cut(plan)
-      if (lastCut != null) graft.engine.Checkpoints.release(lastCut)
-      lastCut = next
-      labels = next
-    }
+        .select(col("e_dst").as("node"), col("w.l").as("community"))
+    }.state
     e.unpersist()
-    labels.select(col("node"), col("lbl").as("community"))
+    labels
   }
 }

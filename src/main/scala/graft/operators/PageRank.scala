@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Fixpoint
 
 /** Distributed PageRank over a directed edge list, in FIXED-POINT
   * integer arithmetic (micro-units of 1e-6) so every contribution sum
@@ -16,10 +17,13 @@ import org.apache.spark.sql.functions._
   * `0.15·SCALE + (85 · Σ contribs) div 100`, all in BIGINT.
   *
   * Scale (Pregel-on-DataFrames): the edge list is the only large
-  * relation; each iteration is one equi-join (ranks ⋈ edges on src —
-  * both sides hash-partitioned on the same key, so AQE reuses the
-  * exchange) plus one map-side-combinable groupBy on dst. Lineage is
-  * cut every iteration through [[graft.engine.Checkpoints]] —
+  * relation; each iteration after the first is one equi-join (ranks ⋈
+  * edges on src — both sides hash-partitioned on the same key, so AQE
+  * reuses the exchange) plus one map-side-combinable groupBy on dst.
+  * Round 1 skips the join: the initial ranks are known constants
+  * (uniform, or all mass on the source for [[personalized]]), so its
+  * contributions read straight off the pinned edge list. Lineage is
+  * cut every iteration by [[graft.engine.Fixpoint]] —
   * `localCheckpoint` by default, or a reliable `checkpoint()` when
   * `graft.checkpoint.dir` is set (the form a long iterative job on a
   * real cluster needs to survive executor loss).
@@ -58,38 +62,29 @@ object PageRank {
       .persist()
     // every node appears as a src in a symmetrized edge list.
     // Lineage is cut EVERY round: a stride-2 variant (fuse two rounds
-    // per cut to halve materializations) was tried in round 8 and
-    // measured ~10% SLOWER at sf0.1 (4.62 vs 4.19 s — the fused
-    // two-shuffle job loses more to reduced pipelining than the saved
-    // block write gains), and its release pairing silently leaked
-    // every cut (release() on the intervening round's uncut composite
-    // plan is a structural no-op). Per-round cut + release of the
-    // previous round keeps resident blocks at ~2× the working set.
-    var ranks = ew.select(col("e_src").as("node")).distinct()
+    // per cut to halve materializations) measured ~10% SLOWER at sf0.1
+    // (4.62 vs 4.19 s — the fused two-shuffle job loses more to reduced
+    // pipelining than the saved block write gains).
+    val ranks0 = ew.select(col("e_src").as("node")).distinct()
       .select(col("node"), lit(Scale).as("r"))
-    var lastCut: DataFrame = null
-    for (i <- 1 to iterations) {
-      // round-1 identity shortcut (r16): the initial ranks are
-      // uniformly Scale over exactly the e_src domain, so the first
-      // join with them IS the pinned edge list — contribution
-      // Scale div d per edge, no |V|⋈|E| join and no distinct-node
-      // materialization before it.
+    val ranks = Fixpoint.iterate(ranks0, iterations) { (prev, i) =>
+      // round-1 identity shortcut: the initial ranks are uniformly
+      // Scale over exactly the e_src domain, so the first join with
+      // them IS the pinned edge list — contribution Scale div d per
+      // edge, no |V|⋈|E| join and no distinct-node materialization
+      // before it.
       val contribs =
         if (i == 1)
           ew.select(col("e_dst").as("node2"),
             expr(s"CAST($Scale AS BIGINT) div d").as("c"))
-        else ranks
+        else prev
           .join(ew, col("node") === col("e_src"))
           .select(col("e_dst").as("node2"), expr("r div d").as("c"))
-      val plan = contribs.groupBy(col("node2"))
+      contribs.groupBy(col("node2"))
         .agg(sum(col("c")).as("s"))
         .select(col("node2").as("node"),
           (lit(15L * Scale / 100) + expr("(85 * s) div 100")).as("r"))
-      val next = graft.engine.Checkpoints.cut(plan)
-      if (lastCut != null) graft.engine.Checkpoints.release(lastCut)
-      lastCut = next
-      ranks = next
-    }
+    }.state
     ew.unpersist() // ranks is materialized by the final lineage cut
     ranks
   }
@@ -121,32 +116,30 @@ object PageRank {
       .persist()
     val base = when(col("node") === source, lit(15L * Scale / 100))
       .otherwise(lit(0L))
-    var ranks = nodes.select(col("node"),
+    val ranks0 = nodes.select(col("node"),
       when(col("node") === source, lit(Scale)).otherwise(lit(0L)).as("r"))
-    for (i <- 1 to iterations) {
-      // round-1 identity shortcut (r16): initial rank is Scale at
-      // `source` and 0 elsewhere, so the first join reduces to the
-      // source's own out-edges. Later rounds drop rank-0 rows before
-      // the join — a 0 div d contribution adds nothing to any sum and
-      // the refresh left-join restores missing nodes via coalesce, so
-      // the result is exact while early rounds join only the frontier.
+    val ranks = Fixpoint.iterate(ranks0, iterations) { (prev, i) =>
+      // round-1 identity shortcut: initial rank is Scale at `source`
+      // and 0 elsewhere, so the first join reduces to the source's own
+      // out-edges. Later rounds drop rank-0 rows before the join — a
+      // 0 div d contribution adds nothing to any sum and the refresh
+      // left-join restores missing nodes via coalesce, so the result is
+      // exact while early rounds join only the frontier.
       val contribs =
         if (i == 1)
           ew.filter(col("e_src") === source)
             .select(col("e_dst").as("node2"),
               expr(s"CAST($Scale AS BIGINT) div d").as("c"))
-        else ranks.filter(col("r") =!= 0L)
+        else prev.filter(col("r") =!= 0L)
           .join(ew, col("node") === col("e_src"))
           .select(col("e_dst").as("node2"), expr("r div d").as("c"))
       val sums = contribs.groupBy(col("node2"))
         .agg(sum(col("c")).as("s"))
-      val next = graft.engine.Checkpoints.cut(nodes
+      nodes
         .join(sums, col("node") === col("node2"), "left")
         .select(col("node"),
-          (base + expr("(85 * coalesce(s, 0L)) div 100")).as("r")))
-      graft.engine.Checkpoints.release(ranks)
-      ranks = next
-    }
+          (base + expr("(85 * coalesce(s, 0L)) div 100")).as("r"))
+    }.state
     ew.unpersist()
     nodes.unpersist()
     ranks
@@ -196,16 +189,16 @@ object PageRank {
         col("node") === col("o_src"), "left_anti")
       .select(col("node").as("dn"))
       .persist()
-    var ranks = nodes.select(col("node"), lit(Scale).as("r"))
-    for (i <- 1 to iterations) {
-      // round-1 identity shortcuts (r16): uniform initial ranks make
-      // the first contribution join the pinned edge list itself, and
-      // the first dangling sum |dangNodes|·Scale — no rank join either.
+    val ranks0 = nodes.select(col("node"), lit(Scale).as("r"))
+    val ranks = Fixpoint.iterate(ranks0, iterations) { (prev, i) =>
+      // round-1 identity shortcuts: uniform initial ranks make the
+      // first contribution join the pinned edge list itself, and the
+      // first dangling sum |dangNodes|·Scale — no rank join either.
       val contribs =
         if (i == 1)
           ew.select(col("e_dst").as("node2"),
             expr(s"CAST($Scale AS BIGINT) div d").as("c"))
-        else ranks
+        else prev
           .join(ew, col("node") === col("e_src"))
           .select(col("e_dst").as("node2"), expr("r div d").as("c"))
       val sums = contribs.groupBy(col("node2"))
@@ -214,20 +207,18 @@ object PageRank {
       // (coalesce: a sink-free graph has an empty sum, not a null share)
       val dangling =
         if (i == 1) dangNodes.agg((count(lit(1)) * lit(Scale)).as("dang"))
-        else ranks
+        else prev
           .join(dangNodes, col("node") === col("dn"), "left_semi")
           .agg(coalesce(sum(col("r")), lit(0L)).as("dang"))
-      val next = graft.engine.Checkpoints.cut(nodes
+      nodes
         .join(sums, col("node") === col("node2"), "left")
         .crossJoin(broadcast(dangling))
         .crossJoin(broadcast(nRow))
         .select(col("node"),
           (lit(15L * Scale / 100) +
             expr("(85 * (coalesce(s, 0L) + dang div n_nodes)) div 100")
-          ).as("r")))
-      graft.engine.Checkpoints.release(ranks)
-      ranks = next
-    }
+          ).as("r"))
+    }.state
     ew.unpersist()
     nodes.unpersist()
     dangNodes.unpersist()

@@ -2,6 +2,7 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.engine.Fixpoint
 
 /** Shared min-relaxation rounds — BFS frontier expansion (unit steps)
   * and Bellman–Ford SSSP (weighted steps) over a pinned edge list:
@@ -21,9 +22,9 @@ import org.apache.spark.sql.functions._
   *    symmetric co-occurrence graphs these queries build), so
   *    `min over ({dd} ∪ candidates)` == `least(dd, min(candidates))`
   *    row for row, in exact BIGINT.
-  *  - An `observe()`-backed changed-row count rides the SAME job as
-  *    the round's lineage cut ([[Components]]' accumulator pattern,
-  *    no extra action): when a round improves NO distance, every
+  *  - A changed-row count rides the SAME job as the round's lineage
+  *    cut ([[graft.engine.Fixpoint]]'s `observe()` metric, no extra
+  *    action): when a round improves NO distance, every
   *    later round is the identity (relaxation is a pure function of
   *    dist), so stopping early returns the declared-iteration result
   *    exactly — the [[KCore]] converged-peel contract on the
@@ -53,30 +54,23 @@ object Relax {
     *         contract).
     */
   def rounds(edges: DataFrame, dist0: DataFrame, iterations: Int,
-      weighted: Boolean): DataFrame = {
-    var dist = dist0
-    var converged = false
-    var i = 0
-    while (!converged && i < iterations) {
+      weighted: Boolean): DataFrame =
+    fixpoint(edges, dist0, iterations, weighted).state
+
+  /** [[rounds]] with [[Fixpoint]]'s round count and convergence flag. */
+  private[graft] def fixpoint(edges: DataFrame, dist0: DataFrame,
+      iterations: Int, weighted: Boolean): Fixpoint.Result =
+    Fixpoint.iterate(dist0, iterations) { (dist, _) =>
       val step =
         if (weighted) col("dd") + col("w") else col("dd") + lit(1L)
       val relMin = dist.join(edges, col("node") === col("u"))
         .filter(col("dd") =!= Long.MaxValue)
         .select(col("v").as("_rn"), step.as("_rd"))
         .groupBy(col("_rn")).agg(min(col("_rd")).as("_rd"))
-      val obs = new org.apache.spark.sql.Observation(
-        s"relax_round_${i}_${System.nanoTime()}")
-      val next = graft.engine.Checkpoints.cut(dist
+      dist
         .join(relMin, col("node") === col("_rn"), "left")
-        .observe(obs, sum(when(col("_rd") < col("dd"), 1L)
-          .otherwise(0L)).as("changed"))
         .select(col("node"),
-          least(col("dd"), coalesce(col("_rd"), col("dd"))).as("dd")))
-      graft.engine.Checkpoints.release(dist)
-      dist = next
-      converged = obs.get("changed").asInstanceOf[Long] == 0L
-      i += 1
+          least(col("dd"), coalesce(col("_rd"), col("dd"))).as("dd"),
+          (col("_rd") < col("dd")).as(Fixpoint.Changed))
     }
-    dist
-  }
 }

@@ -84,25 +84,16 @@ object Similarity {
     */
   private[operators] def kmeans(c: DataFrame, nCentroids: Int,
       iters: Int): DataFrame = {
-    var centroids = c.orderBy("cid").limit(nCentroids)
+    val centroids0 = c.orderBy("cid").limit(nCentroids)
       .select(col("cid").as("ctr"), col("cv").as("cvec"))
-    for (_ <- 1 to iters) {
-      val assigned = nearest1(c, centroids, "cid", "cv", Seq("cv"), "actr")
-      // lineage cut (Checkpoints.cut): centroids are nCentroids tiny rows — truncate
-      // the lineage so iteration i doesn't recompute iterations 1..i-1
-      centroids = assigned
+    graft.engine.Fixpoint.iterate(centroids0, iters) { (centroids, _) =>
+      nearest1(c, centroids, "cid", "cv", Seq("cv"), "actr")
         .select(col("actr").as("ctr"), posexplode(col("cv")))
         .groupBy(col("ctr"), col("pos")).agg(avg(col("col")).as("m"))
         .groupBy(col("ctr"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
           s => s.getField("m").cast("float")).as("cvec"))
-        .transform { d =>
-          val cut = graft.engine.Checkpoints.cut(d)
-          graft.engine.Checkpoints.release(centroids)
-          cut
-        }
-    }
-    centroids
+    }.state
   }
 
   /** A trained, persistable IVF index: `centroids` (ctr, cvec) and
@@ -530,25 +521,21 @@ object Similarity {
     require(dim % m == 0, s"pqIndex: dim=$dim not divisible by m=$m")
     val dsub = dim / m
     val sub = subVectors(c, "cid", "cv", m, dsub, "sv")
-    var cb = subVectors(c.orderBy("cid").limit(ksub), "cid", "cv", m, dsub, "sv")
+    val cb0 = subVectors(c.orderBy("cid").limit(ksub), "cid", "cv", m, dsub, "sv")
       .select(col("sub"), col("cid").as("code"), col("sv").as("cvec"))
-    for (_ <- 1 to iters) {
-      val assigned = sub.join(broadcast(cb), Seq("sub"))
+    val cb = graft.engine.Fixpoint.iterate(cb0, iters) { (cb, _) =>
+      sub.join(broadcast(cb), Seq("sub"))
         .groupBy(col("cid"), col("sub"))
         .agg(min(struct(l2Dist(col("sv"), col("cvec")).as("d"),
           col("code").as("code"), col("sv").as("sv"))).as("s"))
         .select(col("sub"), col("s.code").as("code"), col("s.sv").as("sv"))
-      val next = assigned
         .select(col("sub"), col("code"), posexplode(col("sv")))
         .groupBy(col("sub"), col("code"), col("pos"))
         .agg(avg(col("col")).as("mval"))
         .groupBy(col("sub"), col("code"))
         .agg(transform(array_sort(collect_list(struct(col("pos"), col("mval")))),
           s => s.getField("mval").cast("float")).as("cvec"))
-      val cut = graft.engine.Checkpoints.cut(next)
-      graft.engine.Checkpoints.release(cb)
-      cb = cut
-    }
+    }.state
     // densify code labels per subspace (order-preserving: rank by the
     // training id, so assignment tie-breaks — min over (dist, code) —
     // are unchanged by the relabeling)

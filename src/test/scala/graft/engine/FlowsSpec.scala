@@ -125,6 +125,10 @@ class FlowsSpec extends SparkSpec {
       while (count() < 5 && System.currentTimeMillis() < deadline)
         Thread.sleep(200)
       assert(count() == 5)
+      // the listener hears of an execution only after its batch ends and
+      // the listener bus delivers the event; read the counts after both
+      q.processAllAvailable()
+      org.apache.spark.SpecBridge.drainListeners(spark.sparkContext)
       // the sink action ran; the per-batch metric actions did not
       assert(seen.getOrDefault("foreachPartition", 0) >= 1)
       assert(seen.getOrDefault("count", 0) == 0,

@@ -4,13 +4,11 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
-class RelaxSpec extends SparkSpec {
-  import spark.implicits._
-
+object RelaxSpec {
   /** The previous inlined loop (union + groupBy min, fixed rounds) —
     * the reference [[Relax.rounds]] must reproduce exactly.
     */
-  private def reference(e0: DataFrame, dist0: DataFrame, iters: Int,
+  def reference(e0: DataFrame, dist0: DataFrame, iters: Int,
       weighted: Boolean): DataFrame = {
     var dist = dist0
     for (_ <- 1 to iters) {
@@ -23,6 +21,11 @@ class RelaxSpec extends SparkSpec {
     }
     dist
   }
+}
+
+class RelaxSpec extends SparkSpec {
+  import spark.implicits._
+  import RelaxSpec.reference
 
   private def graph(): (DataFrame, DataFrame) = {
     // symmetric graph with a chain (convergence needs several rounds),
