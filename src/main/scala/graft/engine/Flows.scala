@@ -1,6 +1,8 @@
 package graft.engine
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -22,27 +24,12 @@ import graft.sinks.SqlSink
   */
 object Flows extends org.apache.spark.internal.Logging {
 
-  /** Corrupt-JSON dead-lettering (reference amqp.py:107-109: nack, no
-    * requeue — message leaves the pipeline but is observable): a row is
-    * valid iff the body parses as a JSON object/array.
+  /** A body is corrupt iff it does not parse as a JSON object/array:
+    * such messages dead-letter (reference amqp.py:107-109: nack, no
+    * requeue — the message leaves the pipeline but stays observable).
     */
-  def validJson(df: DataFrame, jsonCol: String): DataFrame =
-    df.filter(get_json_object(col(jsonCol), "$").isNotNull)
-
-  def invalidJson(df: DataFrame, jsonCol: String): DataFrame =
-    df.filter(get_json_object(col(jsonCol), "$").isNull)
-
-  /** R3 first half (reference amqp.py:101-103): a message whose
-    * content type is not JSON gets a logged WARNING but is still
-    * forwarded — only bodies that fail to parse dead-letter. Expressed
-    * as an aggregate so it can ride the sink's own job via `observe()`
-    * instead of costing a separate count() action per micro-batch.
-    */
-  def nonJsonContentTypeCount(batch: DataFrame): Column =
-    if (batch.columns.contains("content_type"))
-      sum(when(col("content_type").isNotNull &&
-        col("content_type") =!= "application/json", 1L).otherwise(0L))
-    else sum(lit(0L))
+  private def corrupt(jsonCol: String): Column =
+    get_json_object(col(jsonCol), "$").isNull
 
   def start(spark: SparkSession, cfg: Config.Engine,
       checkpointRoot: String): Seq[StreamingQuery] = {
@@ -69,7 +56,6 @@ object Flows extends org.apache.spark.internal.Logging {
         // declared on bind, before the stream starts consuming
         kin.get("exchange_declare_kwargs").foreach {
           case m: java.util.Map[_, _] =>
-            import scala.jdk.CollectionConverters._
             // a nested `arguments:` map (pika's arguments dict) is
             // flattened to `arguments.<key>` entries; Broker.declare
             // validates the key set (pika parity — unknown kwargs fail
@@ -111,7 +97,6 @@ object Flows extends org.apache.spark.internal.Logging {
           case Some(l: java.util.List[_]) =>
             SqlSink.Positional(l.toArray.map(_.toString).toSeq)
           case Some(m: java.util.Map[_, _]) =>
-            import scala.jdk.CollectionConverters._
             SqlSink.Named(m.asScala.toSeq.map { case (k, v) =>
               k.toString -> v.toString })
           case Some(other) =>
@@ -121,48 +106,56 @@ object Flows extends org.apache.spark.internal.Logging {
         }
         // schema-less flows bind dotted paths against the raw JSON body
         val jsonCol = if (stream.columns.contains("value")) Some("value") else None
+        val isCorrupt = jsonCol.fold(lit(false))(corrupt)
+        // R3 first half (reference amqp.py:101-103): a non-JSON content
+        // type gets a logged WARNING but the message is still forwarded
+        val isNonJson =
+          if (stream.columns.contains("content_type"))
+            col("content_type") =!= "application/json"
+          else lit(false)
+        // with a dead-letter dir the corrupt rows reach the driver too (from
+        // a broker input, at most size_limit per micro-batch)
+        val metrics = Seq(count_if(isNonJson).as("non_json"),
+          count_if(isCorrupt).as("corrupt")) ++ deadLetter.map(_ => collect_list(
+            when(isCorrupt, struct(stream.columns.map(col): _*))).as("corrupt_rows"))
         // idempotent: true => batchId-keyed replay protection (exactly-
         // once with the checkpointed replayable source)
-        val sink =
-          if (kout.get("idempotent").exists(_.toString.toBoolean))
-            SqlSink.idempotentForeachBatch(url, query, mapping, name,
-              jsonCol)
-          else SqlSink.foreachBatch(url, query, mapping, jsonCol, deadLetter)
-        (batch0: DataFrame, id: Long) => {
-          // ONE action per micro-batch on the happy path: the
-          // content-type warn count and the corrupt-JSON count ride the
-          // sink's own job as observe() metrics. The dead-letter write
-          // (a second action) runs only when the metric says corrupt
-          // rows actually exist — the cache makes that re-read cheap.
-          val batch = batch0.persist()
-          try {
-            val corruptCount = jsonCol match {
-              case Some(c) => sum(when(
-                get_json_object(col(c), "$").isNull, 1L).otherwise(0L))
-              case None => sum(lit(0L))
-            }
-            val obs = new org.apache.spark.sql.Observation()
-            val observed = batch.observe(obs,
-              nonJsonContentTypeCount(batch).as("non_json_ct"),
-              corruptCount.as("corrupt"))
-            val valid = jsonCol.fold(observed)(c => validJson(observed, c))
-            sink(valid, id)
-            // bounded fetch: on success the metrics arrive with the job's
-            // SQLExecutionEnd event (ms); if the best-effort sink swallowed
-            // a job failure the event may never carry metrics — give up
-            // after ~2 s instead of blocking the stream on obs.get
-            val deadline = System.currentTimeMillis() + 2000
-            var m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs)
-            while (m.isEmpty && System.currentTimeMillis() < deadline)
-              m = org.apache.spark.sql.GraftBridge.observedOrEmpty(obs) // ~100 ms internal wait per call
-            def metric(k: String): Long =
-              m.get(k).flatMap(Option(_)).map(_.toString.toLong).getOrElse(0L)
-            if (metric("non_json_ct") > 0) logWarning(
-              s"${metric("non_json_ct")} message(s) with non-JSON content " +
-                "type received; forwarding anyway")
-            if (metric("corrupt") > 0) for (c <- jsonCol; d <- deadLetter)
-              invalidJson(batch, c).write.mode("append").parquet(s"$d/corrupt")
-          } finally { batch.unpersist(); () }
+        val sink: (DataFrame, Long) => Option[Map[String, Row]] =
+          if (kout.get("idempotent").exists(_.toString.toBoolean)) {
+            val write = SqlSink.idempotentForeachBatch(url, query, mapping,
+              name, jsonCol)
+            (df, id) => Some(write(df, id))
+          } else SqlSink.foreachBatch(url, query, mapping, jsonCol)
+        (batch: DataFrame, id: Long) => {
+          // ONE action per micro-batch that the sink writes: the counts and
+          // the corrupt rows ride the sink's own job as observed metrics,
+          // so the batch is read once — each read adds to the progress
+          // event's numInputRows.
+          val observed = batch.observe("ingest", metrics.head, metrics.tail: _*)
+          sink(observed.filter(!isCorrupt), id) match {
+            case Some(observedMetrics) =>
+              val m = observedMetrics("ingest")
+              val nonJson = m.getAs[Long]("non_json")
+              Metrics.addCounts(name, m.getAs[Long]("corrupt"), nonJson)
+              if (nonJson > 0) logWarning(
+                s"$nonJson message(s) with non-JSON content type received; " +
+                  "forwarding anyway")
+              for (d <- deadLetter) {
+                val rows = m.getSeq[Row](m.fieldIndex("corrupt_rows"))
+                if (rows.nonEmpty) spark.createDataFrame(rows.asJava, batch.schema)
+                  .write.mode("append").parquet(s"$d/corrupt")
+              }
+            case None =>
+              // the dropped batch is read once more, whole, into
+              // batch_<id>/; its corrupt rows (whose count died with the
+              // failed job) are taken from that copy, not from another read
+              for (d <- deadLetter) {
+                val dump = s"$d/batch_$id"
+                batch.write.mode("append").parquet(dump)
+                if (jsonCol.isDefined) spark.read.parquet(dump).filter(isCorrupt)
+                  .write.mode("append").parquet(s"$d/corrupt")
+              }
+          }
         }
       case "parquet" =>
         val path = outBlock.kwargs("path").toString

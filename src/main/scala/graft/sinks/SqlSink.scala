@@ -3,7 +3,9 @@ package graft.sinks
 import java.sql.DriverManager
 
 import org.apache.spark.internal.Logging
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
 
 import graft.functions.PathExtract
@@ -19,8 +21,8 @@ import graft.functions.PathExtract
   *     upgrade: N partitions flush in parallel instead of the
   *     reference's single locked consumer thread;
   *   - error policy: log & drop the failed batch, pipeline continues
-  *     (sql.py:99-105), with the dropped batch written to a dead-letter
-  *     parquet dir when configured — observable, not silent.
+  *     (sql.py:99-105); the caller learns of the drop and can keep the
+  *     batch (Flows writes it to its dead-letter dir).
   *
   * Scale notes: rows never touch the driver; each executor partition
   * opens its own connection (connection count == partitions, so size
@@ -103,33 +105,48 @@ object SqlSink extends Logging {
     }
   }
 
-  /** A foreachBatch callback writing each micro-batch via JDBC.
-    * Failed batches are logged, dumped to `deadLetterDir` and dropped —
-    * the stream keeps running (reference sql.py:99-105 / R14).
+  /** A foreachBatch callback writing each micro-batch via JDBC. It
+    * returns the metrics observed on the batch (see [[foreachPartition]]),
+    * or None when the batch failed: failed batches are logged and dropped
+    * — the stream keeps running (reference sql.py:99-105 / R14).
     */
   def foreachBatch(url: String, query: String, mapping: Mapping,
-      jsonCol: Option[String] = None,
-      deadLetterDir: Option[String] = None): (DataFrame, Long) => Unit = {
+      jsonCol: Option[String] = None): (DataFrame, Long) => Option[Map[String, Row]] = {
     val (positional, paramOrder) = compile(query)
     (batch: DataFrame, batchId: Long) => {
       val params = mapParameters(batch, mapping, paramOrder, jsonCol)
-      try {
-        writeJdbc(url, positional, params)
-      } catch {
+      try Some(writeJdbc(url, positional, params))
+      catch {
         case e: Exception =>
           // two-log shape mirrors the reference's error contract
           logError(s"Batch $batchId failed: ${e.getMessage}")
           logError(s"Dropped batch $batchId (query: $query)")
-          deadLetterDir.foreach(d =>
-            batch.write.mode("append").parquet(s"$d/batch_$batchId"))
+          None
       }
     }
   }
 
+  /** Runs `f` on every partition of `df` as one SQL execution, like
+    * `Dataset.foreachPartition`, and returns the metrics observed on
+    * `df`'s plan (`Dataset.observe(name, ...)`). They are read off the
+    * executed plan itself, so no listener event is awaited.
+    */
+  private def foreachPartition(df: DataFrame)(f: Iterator[Row] => Unit): Map[String, Row] = {
+    val qe = df.queryExecution
+    val schema = df.schema
+    SQLExecution.withNewExecutionId(qe, Some("foreachPartition")) {
+      qe.toRdd.foreachPartition { rows =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(schema)
+        f(rows.map(toRow(_).asInstanceOf[Row]))
+      }
+    }
+    qe.observedMetrics
+  }
+
   /** One JDBC batch per partition (the executemany analog). */
-  def writeJdbc(url: String, positionalSql: String, params: DataFrame): Unit = {
+  def writeJdbc(url: String, positionalSql: String, params: DataFrame): Map[String, Row] = {
     val n = params.columns.length
-    params.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+    foreachPartition(params) { rows =>
       if (rows.nonEmpty) {
         val conn = DriverManager.getConnection(url)
         try {
@@ -173,6 +190,7 @@ object SqlSink extends Logging {
     * restart re-runs the last uncommitted batch — at-least-once) finds
     * its marker and skips. Checkpoint + replayable source + this sink =
     * effectively exactly-once end-to-end (SURVEY §7.4 upgrade path).
+    * Returns the metrics observed on the batch.
     *
     * Two replay hazards are closed here: (a) concurrent task attempts
     * for one partition — the marker INSERT goes first inside the
@@ -192,7 +210,7 @@ object SqlSink extends Logging {
     */
   def idempotentForeachBatch(url: String, query: String, mapping: Mapping,
       flowId: String, jsonCol: Option[String] = None,
-      sinkPartitions: Int = 16): (DataFrame, Long) => Unit = {
+      sinkPartitions: Int = 16): (DataFrame, Long) => Map[String, Row] = {
     val (positional, paramOrder) = compile(query)
     ensureMarkerTable(url)
     (batch: DataFrame, batchId: Long) => {
@@ -200,12 +218,10 @@ object SqlSink extends Logging {
       val params = mapped.repartition(sinkPartitions, mapped.columns.map(col): _*)
       val n = params.columns.length
       try {
-        // Dataset.foreachPartition (not .rdd) so the action carries a SQL
-        // execution id — upstream observe() metrics (Flows' one-pass
-        // corrupt/content-type counts) are delivered off this same job.
-        // The partition id is still the deterministic hash-partition
-        // index, read off the task context.
-        params.foreachPartition { (rows: Iterator[org.apache.spark.sql.Row]) =>
+        // one SQL execution, whose observed metrics (Flows' one-pass
+        // corrupt/content-type counts) are returned. The partition id is
+        // the deterministic hash-partition index, read off the task context.
+        foreachPartition(params) { rows =>
           val pid = org.apache.spark.TaskContext.getPartitionId()
           if (rows.nonEmpty) {
             val conn = DriverManager.getConnection(url)

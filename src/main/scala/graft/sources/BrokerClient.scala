@@ -63,8 +63,6 @@ final class BrokerClient(host: String, port: Int, exchange: String)
   override def latest: Long = simple(s"LATEST $exchange")(1).toLong
   override def committed: Long = simple(s"COMMITTED $exchange")(1).toLong
   override def ack(until: Long): Unit = { simple(s"ACK $exchange $until"); () }
-  override def nack(): Unit = { simple(s"NACK $exchange"); () }
-  override def nackCount: Long = simple(s"NACKCOUNT $exchange")(1).toLong
 
   /** Exchange-declare kwargs passthrough (reference amqp.py:55-78). */
   def declare(kwargs: Map[String, String]): Unit = {

@@ -30,8 +30,6 @@ trait BrokerLog {
   def committed: Long
   /** Ack == truncate the log below `until` (post-commit). */
   def ack(until: Long): Unit
-  def nack(): Unit
-  def nackCount: Long
   /** Offset-axis realignment hint for transports whose offsets are
     * client-manufactured (AMQP: deliveries have per-session tags, no
     * broker-side positions). The source calls this with checkpointed
@@ -70,7 +68,6 @@ final class ExchangeLog(name: String, walDir: Option[Path],
   private case class Entry(contentType: String, body: String)
   private val buf = ArrayBuffer.empty[Entry]
   private var base = 0L                  // offset of buf(0)
-  private var nacked = 0L                // corrupt-drop counter (stats)
   private var walBase = 0L               // offset of the WAL's first line
 
   private val walFile = walDir.map(_.resolve(s"$name.wal"))
@@ -165,9 +162,6 @@ final class ExchangeLog(name: String, walDir: Option[Path],
     // threshold amortizes the rewrite against appends
     if (base - walBase >= compactEvery) rewriteWal()
   }
-
-  override def nack(): Unit = synchronized { nacked += 1 }
-  override def nackCount: Long = synchronized { nacked }
 
   /** Remove the log's on-disk state (WAL + commit marker) — the
     * destruction path of an `auto_delete` exchange: once deleted, a

@@ -22,8 +22,6 @@ import java.util.concurrent.ConcurrentHashMap
   *   LATEST <exchange>                             -> OK <offset>
   *   COMMITTED <exchange>                          -> OK <offset>
   *   ACK <exchange> <until>                        -> OK
-  *   NACK <exchange>                               -> OK
-  *   NACKCOUNT <exchange>                          -> OK <n>
   *   DECLARE <exchange> [k=<b64 v> ...]            -> OK
   *   DECLARED <exchange>                           -> OK [k=<b64 v> ...]
   *   PING                                          -> OK
@@ -121,8 +119,6 @@ final class BrokerServer(port: Int, walDir: Option[Path]) {
     case "LATEST"    => out.println(s"OK ${log(parts(1)).latest}")
     case "COMMITTED" => out.println(s"OK ${log(parts(1)).committed}")
     case "ACK"       => log(parts(1)).ack(parts(2).toLong); out.println("OK")
-    case "NACK"      => log(parts(1)).nack(); out.println("OK")
-    case "NACKCOUNT" => out.println(s"OK ${log(parts(1)).nackCount}")
     case "DECLARE" =>
       val kwargs = parts.drop(2).map { kv =>
         val i = kv.indexOf('=')

@@ -50,7 +50,10 @@ object MqDataSource {
     StructField("exchange", StringType),     // demux key (amqp.py:99)
     StructField("content_type", StringType), // R3 warn path (amqp.py:101-103)
     StructField("offset", LongType),
-    StructField("ts", TimestampType)))       // broker-ingest time
+    // read time (when the partition reader was built), not broker ingest:
+    // each read of a batch stamps its own, so a dropped batch's dead-letter
+    // copy can carry a later `ts` than the sink saw
+    StructField("ts", TimestampType)))
 }
 
 class MqTable(options: CaseInsensitiveStringMap)

@@ -485,7 +485,6 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String,
   // (deliveryTag, contentType, body); index i => offset base + i
   private val buf = ArrayBuffer.empty[(Long, String, String)]
   private var pubSeq = 0L
-  private var nackedCount = 0L
   private var lastEventNanos = System.nanoTime()
   private var subscribedNanos = 0L
   private var settled = false
@@ -592,9 +591,6 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String,
       base = until
     }
   }
-
-  override def nack(): Unit = lock.synchronized { nackedCount += 1 }
-  override def nackCount: Long = lock.synchronized(nackedCount)
 
   def closeConnection(): Unit = lock.synchronized {
     if (conn != null) { conn.close(); conn = null }

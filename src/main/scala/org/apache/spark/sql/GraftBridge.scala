@@ -11,14 +11,6 @@ object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
-  /** Non-blocking-ish observed-metrics fetch (`Observation.getOrEmpty`
-    * is private[sql]): returns empty if the metrics have not arrived
-    * within the call's internal ~100 ms wait, instead of `get`'s
-    * unbounded block — callers that may race a swallowed job failure
-    * poll this under their own deadline.
-    */
-  def observedOrEmpty(obs: Observation): Map[String, Any] = obs.getOrEmpty
-
   /** Re-tag a batch plan as a streaming micro-batch (`isStreaming =
     * true`): the V1 `Source.getBatch` contract. The batch plan is
     * planned once here and its InternalRow RDD becomes the

@@ -43,6 +43,7 @@ class FlowsSpec extends SparkSpec {
       MemoryBroker.publish("e2e", s"""{"message":{"text":"m$i"},"k":$i}"""))
     MemoryBroker.publish("e2e", "not json at all {")
     val ckpt = java.nio.file.Files.createTempDirectory("flow-ckpt").toString
+    Metrics.register(spark)
     val q = Flows.startFlow(spark, cfg, cfg.flows.head, ckpt, "e2e_flow")
     try {
       val deadline = System.currentTimeMillis() + 60000
@@ -67,6 +68,72 @@ class FlowsSpec extends SparkSpec {
       while (deadCount() < 1 && System.currentTimeMillis() < deadline2)
         Thread.sleep(200)
       assert(deadCount() == 1L)
+      assert(Metrics.snapshot("e2e_flow").corrupt == 1L)
+      // each message is read once: dead-lettering must not read the
+      // micro-batch again, as every read adds to numInputRows
+      def rows(): Long = Metrics.snapshot.get("e2e_flow").fold(0L)(_.rows)
+      while (rows() < 7 && System.currentTimeMillis() < deadline2)
+        Thread.sleep(200)
+      assert(rows() == 7L)
+    } finally q.stop()
+  }
+
+  test("a batch the best-effort sink drops still dead-letters its corrupt rows") {
+    val url = "jdbc:derby:memory:dropdb;create=true"
+    val c = DriverManager.getConnection(url)
+    c.createStatement().execute("CREATE TABLE droplogs (v VARCHAR(3))")
+    c.close()
+    val dl = java.nio.file.Files.createTempDirectory("graft-drop-dl").toString
+    // the valid body overflows VARCHAR(3), so the sink drops the batch;
+    // the failed job's corrupt count is lost with its task metrics
+    MemoryBroker.publish("drop_ex", """{"v":"too long for the column"}""")
+    MemoryBroker.publish("drop_ex", "not json {")
+    val cfg = Config.parseString(
+      s"""size_limit: 4
+         |time_limit: 1
+         |blocks:
+         |  - name: in
+         |    type: amqp
+         |    kwargs: {}
+         |  - name: out
+         |    type: sql
+         |    kwargs:
+         |      url: '$url'
+         |flows:
+         |  - - name: in
+         |      kwargs:
+         |        exchange: drop_ex
+         |    - name: out
+         |      kwargs:
+         |        query: "INSERT INTO droplogs (v) VALUES (:v)"
+         |        dead_letter_dir: '$dl'
+         |        parameters:
+         |          v: v
+         |""".stripMargin)
+    val ckpt = java.nio.file.Files.createTempDirectory("drop-ckpt").toString
+    Metrics.register(spark)
+    val q = Flows.startFlow(spark, cfg, cfg.flows.head, ckpt, "drop_flow")
+    try {
+      q.processAllAvailable()
+      def bodies(dir: String): Seq[String] =
+        try spark.read.parquet(s"$dl/$dir").select("value").collect().map(_.getString(0)).toSeq.sorted
+        catch { case _: org.apache.spark.sql.AnalysisException => Seq.empty }
+      // corrupt/ gets the corrupt row; batch_0/ keeps the whole dropped batch
+      assert(bodies("corrupt") == Seq("not json {"))
+      assert(bodies("batch_0") == Seq("not json {", """{"v":"too long for the column"}"""))
+      // both messages sit in one input partition, whose failed task's
+      // metrics are discarded: only the batch_0/ copy reads them
+      def rows(): Long = Metrics.snapshot.get("drop_flow").fold(0L)(_.rows)
+      val deadline = System.currentTimeMillis() + 30000
+      while (rows() < 2 && System.currentTimeMillis() < deadline)
+        Thread.sleep(200)
+      org.apache.spark.SpecBridge.drainListeners(spark.sparkContext)
+      assert(rows() == 2L)
+      val cc = DriverManager.getConnection(url)
+      try {
+        val rs = cc.createStatement().executeQuery("SELECT COUNT(*) FROM droplogs")
+        rs.next(); assert(rs.getInt(1) == 0)
+      } finally cc.close()
     } finally q.stop()
   }
 
@@ -299,6 +366,8 @@ class FlowsSpec extends SparkSpec {
       while (one().isEmpty && System.currentTimeMillis() < deadline)
         Thread.sleep(200)
       assert(one().contains("forwarded"))
+      q.processAllAvailable() // the writer records the counts after the insert
+      assert(Metrics.snapshot("ct_flow").nonJson == 1L)
     } finally q.stop()
   }
 }

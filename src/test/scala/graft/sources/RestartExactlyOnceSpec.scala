@@ -31,7 +31,7 @@ class RestartExactlyOnceSpec extends SparkSpec {
         .option("maxMessagesPerTrigger", "3")
         .load()
         .writeStream
-        .foreachBatch { (b: DataFrame, id: Long) => sink(b, id) }
+        .foreachBatch { (b: DataFrame, id: Long) => sink(b, id); () }
         .option("checkpointLocation", ckpt)
         .trigger(Trigger.ProcessingTime("200 milliseconds"))
         .start()
