@@ -2,10 +2,11 @@ package graft.engine
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
+import graft.functions.JsonPaths
 import graft.sinks.SqlSink
 
 /** Flow assembly: config -> one StreamingQuery per flow (the Spark
@@ -24,12 +25,10 @@ import graft.sinks.SqlSink
   */
 object Flows extends org.apache.spark.internal.Logging {
 
-  /** A body is corrupt iff it does not parse as a JSON object/array:
-    * such messages dead-letter (reference amqp.py:107-109: nack, no
-    * requeue — the message leaves the pipeline but stays observable).
+  /** The column the `sql` writer parses a raw JSON body into, once per
+    * row ([[JsonPaths.parse]]): its validity bit and every parameter path.
     */
-  private def corrupt(jsonCol: String): Column =
-    get_json_object(col(jsonCol), "$").isNull
+  private val Parsed = "_json"
 
   def start(spark: SparkSession, cfg: Config.Engine,
       checkpointRoot: String): Seq[StreamingQuery] = {
@@ -104,9 +103,17 @@ object Flows extends org.apache.spark.internal.Logging {
             throw new IllegalArgumentException(
               s"invalid parameters type: ${other.getClass.getSimpleName}")
         }
-        // schema-less flows bind dotted paths against the raw JSON body
+        // schema-less flows bind dotted paths against the raw JSON body,
+        // parsed once per row. A body is corrupt iff the parse finds no
+        // well-formed JSON value (JsonPaths.Valid): such messages
+        // dead-letter (reference amqp.py:107-109: nack, no requeue — the
+        // message leaves the pipeline but stays observable)
         val jsonCol = if (stream.columns.contains("value")) Some("value") else None
-        val isCorrupt = jsonCol.fold(lit(false))(corrupt)
+        val paths = SqlSink.paths(query, mapping)
+        def parse(df: DataFrame): DataFrame =
+          jsonCol.fold(df)(j => df.withColumn(Parsed, JsonPaths.parse(col(j), paths)))
+        val isCorrupt =
+          if (jsonCol.isDefined) !col(Parsed).getField(JsonPaths.Valid) else lit(false)
         // R3 first half (reference amqp.py:101-103): a non-JSON content
         // type gets a logged WARNING but the message is still forwarded
         val isNonJson =
@@ -118,20 +125,23 @@ object Flows extends org.apache.spark.internal.Logging {
         val metrics = Seq(count_if(isNonJson).as("non_json"),
           count_if(isCorrupt).as("corrupt")) ++ deadLetter.map(_ => collect_list(
             when(isCorrupt, struct(stream.columns.map(col): _*))).as("corrupt_rows"))
+        // the sink reads its parameters off the parsed struct
+        val sinkJson = jsonCol.map(_ => Parsed)
         // idempotent: true => batchId-keyed replay protection (exactly-
         // once with the checkpointed replayable source)
         val sink: (DataFrame, Long) => Option[Map[String, Row]] =
           if (kout.get("idempotent").exists(_.toString.toBoolean)) {
             val write = SqlSink.idempotentForeachBatch(url, query, mapping,
-              name, jsonCol)
+              name, sinkJson)
             (df, id) => Some(write(df, id))
-          } else SqlSink.foreachBatch(url, query, mapping, jsonCol)
+          } else SqlSink.foreachBatch(url, query, mapping, sinkJson)
         (batch: DataFrame, id: Long) => {
           // ONE action per micro-batch that the sink writes: the counts and
           // the corrupt rows ride the sink's own job as observed metrics,
           // so the batch is read once — each read adds to the progress
-          // event's numInputRows.
-          val observed = batch.observe("ingest", metrics.head, metrics.tail: _*)
+          // event's numInputRows. The parse sits below the observation,
+          // which the filter cannot be pushed through: it runs once a row.
+          val observed = parse(batch).observe("ingest", metrics.head, metrics.tail: _*)
           sink(observed.filter(!isCorrupt), id) match {
             case Some(observedMetrics) =>
               val m = observedMetrics("ingest")
@@ -152,8 +162,8 @@ object Flows extends org.apache.spark.internal.Logging {
               for (d <- deadLetter) {
                 val dump = s"$d/batch_$id"
                 batch.write.mode("append").parquet(dump)
-                if (jsonCol.isDefined) spark.read.parquet(dump).filter(isCorrupt)
-                  .write.mode("append").parquet(s"$d/corrupt")
+                if (jsonCol.isDefined) parse(spark.read.parquet(dump)).filter(isCorrupt)
+                  .drop(Parsed).write.mode("append").parquet(s"$d/corrupt")
               }
           }
         }

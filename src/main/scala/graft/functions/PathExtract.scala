@@ -15,15 +15,18 @@ import org.apache.spark.sql.types._
   *
   *   - [[fromJson]]: the payload is a raw JSON *string* column (the
   *     schema-less AMQP-body case). Spark's `get_json_object` natively
-  *     implements all three rules and is whole-stage-codegen'd — no UDF.
+  *     implements all three rules — no UDF — but each call tokenizes the
+  *     whole body again. Several paths over one body (the ingest sink's
+  *     parameters) go through [[JsonPaths.parse]] instead, which parses
+  *     once and yields the same values.
   *   - [[fromStruct]]: the payload was parsed into a typed struct column
   *     (a flow that declared a schema). We compile the path against the
   *     schema at *plan* time: dead paths fold to `lit(null)` so they cost
   *     nothing at runtime, residual nesting becomes `to_json`.
   *
-  * Both compile to `Column` expressions — Catalyst prunes the parquet /
-  * JSON read down to the referenced leaves, so extraction is scan-time
-  * work, not a post-pass.
+  * Both compile to `Column` expressions. Over a typed struct from a
+  * parquet scan, Catalyst prunes the read down to the referenced leaves;
+  * a raw JSON string is read whole and parsed per row.
   */
 object PathExtract {
 

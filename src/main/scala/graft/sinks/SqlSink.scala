@@ -7,8 +7,9 @@ import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.functions.PathExtract
+import graft.functions.{JsonPaths, PathExtract}
 
 /** Batched SQL sink — the Spark re-expression of the reference's
   * `Database` output block (reference sql.py:41-107):
@@ -80,29 +81,47 @@ object SqlSink extends Logging {
   /** Named param -> dotted path (reference DictParametersMapper). */
   case class Named(params: Seq[(String, String)]) extends Mapping
 
+  /** Each bind column's name and the dotted path it reads (None: a named
+    * parameter the mapping leaves unbound, bound to NULL).
+    */
+  private def bindings(mapping: Mapping, paramOrder: Seq[String]): Seq[(String, Option[String])] =
+    mapping match {
+      case Identity       => paramOrder.map(n => n -> Some(n))
+      case Positional(ps) =>
+        require(ps.length == paramOrder.length,
+          s"query has ${paramOrder.length} parameters, mapping has ${ps.length}")
+        ps.zipWithIndex.map { case (p, i) => s"p$i" -> Some(p) }
+      case Named(ps)      =>
+        val byName = ps.toMap
+        paramOrder.map(n => n -> byName.get(n))
+    }
+
+  /** The distinct dotted paths `query`'s parameters read under `mapping`:
+    * the paths a caller parses into the struct [[mapParameters]] reads.
+    */
+  def paths(query: String, mapping: Mapping): Seq[String] =
+    bindings(mapping, compile(query)._2).flatMap(_._2).distinct
+
   /** Project a micro-batch to bind-ready columns per the mapping rules
     * (missing path => NULL, residual nesting => JSON string).
-    * `jsonCol`: when set, paths resolve inside that raw-JSON string
-    * column (the schema-less flow shape); otherwise against the row.
+    * `jsonCol`: when set, paths resolve inside that column, either the
+    * raw JSON string (parsed here, once per row, by [[JsonPaths.parse]])
+    * or the struct [[JsonPaths.parse]] already made of it over at least
+    * [[paths]] (the schema-less flow shape); otherwise against the row.
     */
   def mapParameters(df: DataFrame, mapping: Mapping, paramOrder: Seq[String],
       jsonCol: Option[String]): DataFrame = {
-    def path(p: String): Column = jsonCol match {
-      case Some(j) => PathExtract.fromJson(col(j), p)
-      case None    => PathExtract.fromRow(df, p)
+    val bound = bindings(mapping, paramOrder)
+    val (src, path): (DataFrame, String => Column) = jsonCol match {
+      case None    => (df, PathExtract.fromRow(df, _))
+      case Some(j) =>
+        val parsed = df.schema(j).dataType match {
+          case _: StructType => df
+          case _ => df.select(JsonPaths.parse(col(j), bound.flatMap(_._2)).as(j))
+        }
+        (parsed, p => col(j).getField(JsonPaths.field(p)))
     }
-    mapping match {
-      case Identity         => df.select(paramOrder.map(path): _*).toDF(paramOrder: _*)
-      case Positional(ps)   =>
-        require(ps.length == paramOrder.length,
-          s"query has ${paramOrder.length} parameters, mapping has ${ps.length}")
-        df.select(ps.zipWithIndex.map { case (p, i) => path(p).as(s"p$i") }: _*)
-      case Named(ps)        =>
-        val byName = ps.toMap
-        df.select(paramOrder.map { n =>
-          byName.get(n).map(path(_).as(n)).getOrElse(lit(null).as(n))
-        }: _*)
-    }
+    src.select(bound.map { case (n, p) => p.fold(lit(null))(path).as(n) }: _*)
   }
 
   /** A foreachBatch callback writing each micro-batch via JDBC. It

@@ -2,14 +2,22 @@ package graft.engine
 
 import java.sql.DriverManager
 
+import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+
 import graft.SparkSpec
+import graft.functions.ParseJsonPaths
 import graft.sources.MemoryBroker
+import graft.sources.amqp.{AmqpBroker, AmqpConnection, AmqpServer}
 
 /** End-to-end: YAML config -> flow assembly -> graftmq source ->
   * SQL sink, including corrupt-JSON dead-lettering — the full
   * reference dataflow (cli.py:111-167) on Spark.
   */
 class FlowsSpec extends SparkSpec {
+  private val planNodes = new AdaptiveSparkPlanHelper {}
+
   test("config-driven flow moves messages from broker to SQL table") {
     val url = "jdbc:derby:memory:flowdb;create=true"
     val c = DriverManager.getConnection(url)
@@ -76,6 +84,77 @@ class FlowsSpec extends SparkSpec {
         Thread.sleep(200)
       assert(rows() == 7L)
     } finally q.stop()
+  }
+
+  test("amqp:// transport: valid, corrupt and text/plain bodies are routed and counted") {
+    val server = new AmqpServer(0, None)
+    val url = "jdbc:derby:memory:amqpflowdb;create=true"
+    val c = DriverManager.getConnection(url)
+    c.createStatement().execute("CREATE TABLE amqplogs (msg VARCHAR(100), k INT)")
+    c.close()
+    val dl = java.nio.file.Files.createTempDirectory("graft-amqp-dl").toString
+    val conn = new AmqpConnection("localhost", server.boundPort)
+    try {
+      conn.declareExchange("amqp_e2e", "fanout", durable = true, Map.empty)
+      val json = "application/json"
+      (1 to 4).foreach(i =>
+        conn.publish("amqp_e2e", s"""{"message":{"text":"m$i"},"k":$i}""", json))
+      // valid JSON under a non-JSON content type is forwarded
+      conn.publish("amqp_e2e", """{"message":{"text":"plain"},"k":5}""", "text/plain")
+      val truncated = """{"message":{"text":"cut"},"k":"""
+      conn.publish("amqp_e2e", truncated, json)
+      conn.publish("amqp_e2e", "not json {", "text/plain")
+      val cfg = Config.parseString(
+        s"""size_limit: 4
+           |time_limit: 1
+           |blocks:
+           |  - name: in
+           |    type: amqp
+           |    kwargs: {broker: "amqp://localhost:${server.boundPort}"}
+           |  - name: out
+           |    type: sql
+           |    kwargs:
+           |      url: '$url'
+           |flows:
+           |  - - name: in
+           |      kwargs:
+           |        exchange: amqp_e2e
+           |    - name: out
+           |      kwargs:
+           |        query: "INSERT INTO amqplogs (msg, k) VALUES (:m, CAST(:k AS INT))"
+           |        dead_letter_dir: '$dl'
+           |        parameters:
+           |          m: message.text
+           |          k: k
+           |""".stripMargin)
+      val ckpt = java.nio.file.Files.createTempDirectory("amqp-flow-ckpt").toString
+      Metrics.register(spark)
+      val q = Flows.startFlow(spark, cfg, cfg.flows.head, ckpt, "amqp_flow")
+      try {
+        def rows(): Long = Metrics.snapshot.get("amqp_flow").fold(0L)(_.rows)
+        val deadline = System.currentTimeMillis() + 60000
+        while (rows() < 7 && System.currentTimeMillis() < deadline)
+          Thread.sleep(200)
+        q.processAllAvailable() // the writer records the counts after the insert
+        val cc = DriverManager.getConnection(url)
+        val landed =
+          try {
+            val rs = cc.createStatement().executeQuery(
+              "SELECT msg, k FROM amqplogs ORDER BY k")
+            Iterator.continually(rs).takeWhile(_.next())
+              .map(r => (r.getString(1), r.getInt(2))).toList
+          } finally cc.close()
+        assert(landed == (1 to 4).map(i => (s"m$i", i)) :+ ("plain" -> 5))
+        assert(spark.read.parquet(s"$dl/corrupt").select("value").collect()
+          .map(_.getString(0)).toSeq.sorted == Seq("not json {", truncated).sorted)
+        val m = Metrics.snapshot("amqp_flow")
+        assert((m.rows, m.corrupt, m.nonJson) == ((7L, 2L, 2L)))
+      } finally q.stop()
+    } finally {
+      conn.close()
+      AmqpBroker.reset()
+      server.stop()
+    }
   }
 
   test("a batch the best-effort sink drops still dead-letters its corrupt rows") {
@@ -146,11 +225,14 @@ class FlowsSpec extends SparkSpec {
     // the old writer cost a count() (content-type warn) + isEmpty()
     // (corrupt split) per micro-batch on top of the sink action
     val seen = new java.util.concurrent.ConcurrentHashMap[String, Integer]()
+    val sinkPlans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
     val listener = new org.apache.spark.sql.util.QueryExecutionListener {
       override def onSuccess(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
-          durationNs: Long): Unit =
+          durationNs: Long): Unit = {
         seen.merge(funcName, 1, (a, b) => a + b)
+        if (funcName == "foreachPartition") sinkPlans.add(qe.executedPlan)
+      }
       override def onFailure(funcName: String,
           qe: org.apache.spark.sql.execution.QueryExecution,
           exception: Exception): Unit = ()
@@ -202,6 +284,14 @@ class FlowsSpec extends SparkSpec {
         s"writer must not run a per-batch count(): $seen")
       assert(seen.getOrDefault("isEmpty", 0) == 0,
         s"writer must not run a per-batch isEmpty(): $seen")
+      // each body is parsed once: one fused kernel for the corrupt check
+      // and the parameter, and no get_json_object
+      sinkPlans.forEach { plan =>
+        def count(p: Expression => Boolean) = planNodes.collect(plan) { case n => n }
+          .flatMap(_.expressions.flatMap(_.collect { case e if p(e) => e })).size
+        assert(count(_.isInstanceOf[ParseJsonPaths]) == 1, plan)
+        assert(count(_.isInstanceOf[GetJsonObject]) == 0, plan)
+      }
     } finally {
       q.stop()
       spark.listenerManager.unregister(listener)
