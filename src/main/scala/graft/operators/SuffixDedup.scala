@@ -125,9 +125,10 @@ object SuffixDedup {
     * AQE-skew-splittable. The exposure is the same ROWS landing in
     * the same task (the join-back also co-located them); the window
     * trades AQE splitability for one less |rows| exchange. At sf>=1
-    * with a planted hot gram this is the ScaleProbe follow-up; a
-    * salted two-phase fallback is the recorded mitigation if a
-    * measurement ever shows the spill path degrading.
+    * with a planted hot gram it degraded gracefully (the r16 probe,
+    * `ScaleProbe.scala` in git history at 466ea44); a salted
+    * two-phase fallback is the recorded mitigation if a measurement
+    * ever shows the spill path degrading.
     */
   private def rerank(cls: DataFrame): DataFrame =
     // min-member window over the class groups — one shuffle, no

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
 /** Streaming twins of the batch inventory (SURVEY §2.3 Q23 / §5.3 item 4):
@@ -13,19 +13,13 @@ import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType,
   * aggregation keyed by (window, event_type) — bounded state (hours ×
   * types), partial aggregation map-side per micro-batch. `AvailableNow`
   * processes the backlog in bounded batches then stops, which is also the
-  * production backfill pattern.
+  * production backfill pattern. Every query drains through one runner
+  * ([[withCheckpoint]] + [[drain]], or [[drainToTable]] for a memory
+  * sink), which owns the checkpoint, the trigger and the state partitions.
   */
 object StreamingQueries {
   type Q = (SparkSession, String) => DataFrame
 
-  /** These are bounded local backfills with tiny state: run them with a
-    * few state partitions instead of the session's 32 — each state
-    * partition is a state-store instance with its own checkpoint files
-    * and per-batch commit, and that file churn (not data) dominates the
-    * fixed cost of a small streaming query. State partitioning is
-    * pinned per-checkpoint, so production streams size this once at
-    * first start via the same session conf.
-    */
   /** The file-source schema per events dir, read once per JVM — a
     * repeated `read.parquet(...).schema` costs a footer read + session
     * resolution on every stream launch.
@@ -65,33 +59,64 @@ object StreamingQueries {
       case _        => unix_micros(col("ts").cast("timestamp"))
     }
 
-  /** Streaming reader for the events table, tolerant of both physical
-    * layouts: the driver's single `events.parquet` FILE (streaming
-    * sources must be handed its parent dir + a glob) and the standard
-    * directory-of-part-files layout (handed the subdir itself — a bare
-    * file path is rejected by the streaming source's basePath check).
+  private def isDir(dir: String, table: String): Boolean =
+    java.nio.file.Files.isDirectory(java.nio.file.Paths.get(dir, s"$table.parquet"))
+
+  /** Streaming reader for one testdata table, tolerant of both physical
+    * layouts: a single `<table>.parquet` FILE, as the test data ships
+    * (streaming sources must be handed its parent dir + a glob), and the
+    * standard directory-of-part-files layout (handed the subdir itself —
+    * a bare file path is rejected by the streaming source's basePath
+    * check).
     */
+  private def tableStream(s: SparkSession, dir: String, table: String,
+      schema: StructType): DataFrame =
+    if (isDir(dir, table)) s.readStream.schema(schema).parquet(s"$dir/$table.parquet")
+    else s.readStream.schema(schema)
+      .option("pathGlobFilter", s"$table.parquet").parquet(dir)
+
   private def eventsStream(s: SparkSession, dir: String,
       raw: StructType): DataFrame =
-    if (java.nio.file.Files.isDirectory(
-        java.nio.file.Paths.get(dir, "events.parquet")))
-      s.readStream.schema(raw).parquet(dir + "/events.parquet")
-    else
-      s.readStream.schema(raw)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+    tableStream(s, dir, "events", raw)
 
-  /** Checkpoint for a bounded local backfill: the offset/commit logs
-    * and state-store files fsync per micro-batch, so put them on tmpfs
-    * (/dev/shm) when available instead of a disk-backed /tmp — the
-    * stream is drained and discarded, durability buys nothing here.
+  private val DocsSchema = StructType(Seq(
+    StructField("doc_id", LongType), StructField("text", StringType),
+    StructField("lang", StringType), StructField("source", StringType),
+    StructField("n_chars", LongType)))
+
+  private def docsStream(s: SparkSession, dir: String): DataFrame =
+    tableStream(s, dir, "documents", DocsSchema)
+
+  /** The batch read of `documents` in the same two layouts. */
+  private def docsStatic(s: SparkSession, dir: String): DataFrame =
+    if (isDir(dir, "documents")) s.read.parquet(s"$dir/documents.parquet")
+    else s.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
+
+  /** Every scratch dir lives under tmpfs (/dev/shm) when available
+    * instead of a disk-backed /tmp: the offset/commit logs and
+    * state-store files fsync per micro-batch, and stores and outputs
+    * are read once and discarded — durability buys nothing here.
     * (Production streams pass a real, durable checkpointLocation.)
     */
-  private def scratchCheckpoint(name: String): String = {
-    val base =
-      if (java.nio.file.Files.isDirectory(java.nio.file.Paths.get("/dev/shm")))
-        java.nio.file.Paths.get("/dev/shm")
-      else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-    java.nio.file.Files.createTempDirectory(base, s"graft-$name-").toString
+  private[queries] val scratchBase: java.nio.file.Path = {
+    val shm = java.nio.file.Paths.get("/dev/shm")
+    if (java.nio.file.Files.isDirectory(shm)) shm
+    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
+  }
+
+  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    scratchDirs.forEach(d => deleteRecursively(d))))
+
+  /** A fresh `graft-<tag>-*` dir under [[scratchBase]], deleted
+    * recursively at JVM exit: the DataFrames the queries return read
+    * their stores and outputs lazily, and the per-JVM fixtures are
+    * shared across calls, so no earlier point is safe.
+    */
+  private def scratchDir(tag: String): String = {
+    val dir = java.nio.file.Files.createTempDirectory(scratchBase, s"graft-$tag-").toString
+    scratchDirs.add(dir)
+    dir
   }
 
   private def deleteRecursively(dir: String): Unit = {
@@ -103,11 +128,59 @@ object StreamingQueries {
         .foreach(f => Files.deleteIfExists(f))
   }
 
-  private def withShufflePartitions[T](s: SparkSession, n: Int)(f: => T): T = {
-    val old = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions",
-      sys.env.getOrElse("SPARK_GRAFT_STREAM_PARTS", n.toString))
-    try f finally s.conf.set("spark.sql.shuffle.partitions", old)
+  /** Runs `f` with the session conf `key` set to `value`, restoring the
+    * prior setting afterwards, also when `f` throws.
+    */
+  private def withConf[T](s: SparkSession, key: String, value: String)(f: => T): T = {
+    val prior = s.conf.getOption(key)
+    s.conf.set(key, value)
+    try f finally prior.fold(s.conf.unset(key))(s.conf.set(key, _))
+  }
+
+  /** These are bounded local backfills with tiny state: run them with a
+    * few state partitions instead of the session's count — each state
+    * partition is a state-store instance with its own checkpoint files
+    * and per-batch commit, and that file churn (not data) dominates the
+    * fixed cost of a small streaming query. State partitioning is
+    * pinned per-checkpoint, so production streams size this once at
+    * first start via the same session conf.
+    */
+  private val StatePartitions = 8
+
+  /** The scope of one bounded backfill: `f` gets a fresh scratch
+    * checkpoint and runs with [[StatePartitions]] shuffle partitions
+    * (the drain and any eager batch work around it). Afterwards — also
+    * when `f` throws — the checkpoint is deleted and the session's
+    * partition count restored. A query that drains twice from one
+    * checkpoint runs both drains inside one scope.
+    */
+  private[queries] def withCheckpoint[T](s: SparkSession, tag: String)(f: String => T): T = {
+    val ckpt = scratchDir(tag)
+    try withConf(s, "spark.sql.shuffle.partitions", StatePartitions.toString)(f(ckpt))
+    finally deleteRecursively(ckpt)
+  }
+
+  /** Runs `w` under `Trigger.AvailableNow` at checkpoint `ckpt`: every
+    * batch of the available backlog, then stop. A failed batch fails
+    * the query, and this rethrows it (a `StreamingQueryException`); if
+    * the wait itself is interrupted, the query is stopped before its
+    * checkpoint can be deleted.
+    */
+  private[queries] def drain(ckpt: String)(w: DataStreamWriter[_]): Unit = {
+    val q = w.option("checkpointLocation", ckpt)
+      .trigger(Trigger.AvailableNow()).start()
+    try q.awaitTermination() finally if (q.isActive) q.stop()
+  }
+
+  /** One drain of `stream` into a memory sink in `outputMode`, returned
+    * as its table (named `<tag>_<nanoTime>`, unique per run).
+    */
+  private def drainToTable(s: SparkSession, tag: String,
+      outputMode: String)(stream: Dataset[_]): DataFrame = {
+    val name = s"${tag}_${System.nanoTime()}"
+    withCheckpoint(s, tag)(drain(_)(stream.writeStream
+      .format("memory").queryName(name).outputMode(outputMode)))
+    s.table(name)
   }
 
   /** One far-future sentinel row written as a parquet dir for a second
@@ -124,7 +197,7 @@ object StreamingQueries {
     */
   private def sentinelDir(s: SparkSession, raw: StructType,
       tsMicrosVal: Long): String = {
-    val dir = scratchCheckpoint("sentinel")
+    val dir = scratchDir("sentinel")
     import scala.jdk.CollectionConverters._
     val tsVal: Any = raw("ts").dataType match {
       case LongType => tsMicrosVal * 1000L // nanosAsLong layout
@@ -150,20 +223,52 @@ object StreamingQueries {
 
   private val FourHoursMicros = 4L * 3600 * 1000 * 1000
 
-  /** (max event ts in µs, sentinel dir) per events dir, computed once
-    * per JVM: the max-ts scan and the one-row sentinel write are fixed
-    * costs of the flush pattern, not of an individual query run.
+  /** The sentinel dir per events dir, written once per JVM (4 h past
+    * the max event ts): the max-ts scan and the one-row sentinel write
+    * are fixed costs of the flush pattern, not of an individual query
+    * run.
     */
   private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, String)]()
-  private def sentinelFor(s: SparkSession, dir: String): (Long, String) =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  private def sentinelFor(s: SparkSession, dir: String): String =
     sentinelCache.computeIfAbsent(dir, { d =>
       val raw = eventsSchema(s, d)
       val maxTs = s.read.schema(raw)
         .parquet(s"$d/events.parquet").agg(max(tsMicros(raw)))
         .head.getLong(0)
-      (maxTs, sentinelDir(s, raw, maxTs + FourHoursMicros))
+      sentinelDir(s, raw, maxTs + FourHoursMicros)
     })
+
+  /** The events stream unioned with the sentinel flush stream
+    * ([[sentinelDir]]). NOTE the sentinel must NOT be filtered inside
+    * the stream: a `user_id =!= -1` gets PUSHED INTO the parquet scan,
+    * whose row-group stats (min=max=-1) then skip the sentinel file
+    * entirely — the row never reaches the EventTimeWatermark node and
+    * the final windows and timeouts never fire. It flows through as its
+    * own key instead (a timeout stamp past the final watermark never
+    * emits) and is filtered from the OUTPUT.
+    */
+  private def flushedEvents(s: SparkSession, dir: String,
+      raw: StructType): DataFrame =
+    eventsStream(s, dir, raw)
+      .unionByName(s.readStream.schema(raw).parquet(sentinelFor(s, dir)))
+
+  /** The windowed count/sum of q23 in APPEND mode over an event-time
+    * watermarked `events` stream, drained, sentinel dropped, keyed by
+    * the window start as `startAs`.
+    */
+  private def windowCounts(s: SparkSession, tag: String, events: DataFrame,
+      win: Column, startAs: String): DataFrame =
+    drainToTable(s, tag, "append")(events
+      .groupBy(win, col("event_type"))
+      .agg(count(lit(1)).as("c"), sum(col("value")).as("v")))
+      .filter(col("event_type") =!= "__flush__")
+      .select(
+        col("window.start").cast("string").as(startAs),
+        col("event_type"),
+        col("c"),
+        round(col("v"), 4).as("v"))
+      .orderBy(startAs, "event_type")
 
   /** Q23 via readStream → watermark → window(ts, 1 hour) → memory sink
     * in APPEND mode: each window is emitted exactly once when finalized
@@ -172,39 +277,16 @@ object StreamingQueries {
     * state every micro-batch). StreamingSemanticsSpec pins the
     * eviction; the oracle pins the answer.
     */
-  def q23Stream(s: SparkSession, dir: String): DataFrame = withShufflePartitions(s, 8) {
+  def q23Stream(s: SparkSession, dir: String): DataFrame = {
     // raw = the schema exactly as parquet stores it (ts layout
     // normalized by tsTimestamp/tsSeconds)
     val raw = eventsSchema(s, dir)
-    val name = s"q23_stream_${System.nanoTime()}" // unique memory sink
-    val (_, flushDir) = sentinelFor(s, dir)
-    val events = eventsStream(s, dir, raw)
-    val flush = s.readStream.schema(raw).parquet(flushDir)
-    val stream = events.unionByName(flush)
+    windowCounts(s, "q23_stream", flushedEvents(s, dir, raw)
       .withColumn("ts", tsTimestamp(raw))
       // 2h tolerance for cross-file disorder; the +4h sentinel still
       // pushes the watermark an hour past the last real window's end
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("c"), sum(col("value")).as("v"))
-    val ckpt = scratchCheckpoint("q23")
-    val q = stream.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    deleteRecursively(ckpt) // sentinel dir stays cached for reuse
-    s.table(name)
-      .filter(col("event_type") =!= "__flush__")
-      .select(
-        col("window.start").cast("string").as("h"),
-        col("event_type"),
-        col("c"),
-        round(col("v"), 4).as("v"))
-      .orderBy("h", "event_type")
+      .withWatermark("ts", "2 hours"),
+      window(col("ts"), "1 hour"), "h")
   }
 
   /** q82's streaming twin: SLIDING windows (1 h every 30 min) in APPEND
@@ -213,35 +295,12 @@ object StreamingQueries {
     * Same sentinel-flush drain as [[q23Stream]]; checked against the
     * identical DuckDB oracle as the batch q82.
     */
-  def q82Stream(s: SparkSession, dir: String): DataFrame = withShufflePartitions(s, 8) {
+  def q82Stream(s: SparkSession, dir: String): DataFrame = {
     val raw = eventsSchema(s, dir)
-    val name = s"q82_stream_${System.nanoTime()}"
-    val (_, flushDir) = sentinelFor(s, dir)
-    val events = eventsStream(s, dir, raw)
-    val flush = s.readStream.schema(raw).parquet(flushDir)
-    val stream = events.unionByName(flush)
+    windowCounts(s, "q82_stream", flushedEvents(s, dir, raw)
       .withColumn("ts", tsTimestamp(raw))
-      .withWatermark("ts", "2 hours")
-      .groupBy(window(col("ts"), "1 hour", "30 minutes"), col("event_type"))
-      .agg(count(lit(1)).as("c"), sum(col("value")).as("v"))
-    val ckpt = scratchCheckpoint("q82")
-    val q = stream.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    deleteRecursively(ckpt)
-    s.table(name)
-      .filter(col("event_type") =!= "__flush__")
-      .select(
-        col("window.start").cast("string").as("w_start"),
-        col("event_type"),
-        col("c"),
-        round(col("v"), 4).as("v"))
-      .orderBy("w_start", "event_type")
+      .withWatermark("ts", "2 hours"),
+      window(col("ts"), "1 hour", "30 minutes"), "w_start")
   }
 
   /** At-least-once delivery repaired in-stream: the event stream is
@@ -254,36 +313,14 @@ object StreamingQueries {
     * rollup must then match q23's BATCH oracle row-for-row:
     * dedup ∘ agg == exactly-once agg.
     */
-  def q148StreamDedup(s: SparkSession, dir: String): DataFrame = withShufflePartitions(s, 8) {
+  def q148StreamDedup(s: SparkSession, dir: String): DataFrame = {
     val raw = eventsSchema(s, dir)
-    val name = s"q148_stream_dedup_${System.nanoTime()}"
-    val (_, flushDir) = sentinelFor(s, dir)
-    def delivery() = eventsStream(s, dir, raw)
-    val flush = s.readStream.schema(raw).parquet(flushDir)
-    val stream = delivery().unionByName(delivery()).unionByName(flush)
+    windowCounts(s, "q148_stream_dedup", eventsStream(s, dir, raw)
+      .unionByName(flushedEvents(s, dir, raw))
       .withColumn("ts", tsTimestamp(raw))
       .withWatermark("ts", "2 hours")
-      .dropDuplicatesWithinWatermark("event_id")
-      .groupBy(window(col("ts"), "1 hour"), col("event_type"))
-      .agg(count(lit(1)).as("c"), sum(col("value")).as("v"))
-    val ckpt = scratchCheckpoint("q148")
-    val q = stream.writeStream
-      .format("memory")
-      .queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    deleteRecursively(ckpt)
-    s.table(name)
-      .filter(col("event_type") =!= "__flush__")
-      .select(
-        col("window.start").cast("string").as("h"),
-        col("event_type"),
-        col("c"),
-        round(col("v"), 4).as("v"))
-      .orderBy("h", "event_type")
+      .dropDuplicatesWithinWatermark("event_id"),
+      window(col("ts"), "1 hour"), "h")
   }
 
   /** Sessionization through native session_window in a STREAMING query,
@@ -293,14 +330,9 @@ object StreamingQueries {
     * as the batch lag-based q25 — three independent implementations of
     * the same semantics must agree.
     */
-  def q25Stream(s: SparkSession, dir: String): DataFrame = withShufflePartitions(s, 8) {
+  def q25Stream(s: SparkSession, dir: String): DataFrame = {
     val raw = eventsSchema(s, dir)
-    val name = s"q25_stream_${System.nanoTime()}"
-    val ckpt = scratchCheckpoint("q25")
-    val (_, flushDir) = sentinelFor(s, dir)
-    val events = eventsStream(s, dir, raw)
-    val flush = s.readStream.schema(raw).parquet(flushDir)
-    val q = events.unionByName(flush)
+    val sessions = flushedEvents(s, dir, raw)
       .withColumn("ts_s", timestamp_seconds(tsSeconds(raw)))
       .withWatermark("ts_s", "2 hours")
       // Boundary semantics verified empirically (sf0.01 has exact-gap
@@ -311,15 +343,7 @@ object StreamingQueries {
       // ties; a "+1s gap" adjustment would actually break them apart.
       .groupBy(session_window(col("ts_s"), "30 minutes"), col("user_id"))
       .agg(count(lit(1)).as("n"))
-      .writeStream
-      .format("memory").queryName(name)
-      .outputMode("append")
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    deleteRecursively(ckpt) // sentinel dir stays cached for reuse
-    s.table(name)
+    drainToTable(s, "q25_stream", "append")(sessions)
       .filter(col("user_id") =!= -1L)
       .groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_sessions"))
@@ -334,30 +358,45 @@ object StreamingQueries {
     * joins are stateless, so batch equality is exact regardless of
     * micro-batching).
     */
-  def q89StreamStatic(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q89_stream_static_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q89")
-      val dim = graft.engine.Tables(s, dir, "customer")
-        .select(col("c_custkey"), col("c_nationkey"))
-      val q = eventsStream(s, dir, raw)
-        .filter(col("event_type") === "purchase")
-        .join(dim, col("user_id") === col("c_custkey")) // static side broadcasts
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .groupBy(col("c_nationkey"))
-        .agg(count(lit(1)).as("n_purchases"),
-          round(sum(col("value")), 4).as("total_value"))
-        .orderBy("c_nationkey")
-    }
+  def q89StreamStatic(s: SparkSession, dir: String): DataFrame = {
+    val raw = eventsSchema(s, dir)
+    val dim = graft.engine.Tables(s, dir, "customer")
+      .select(col("c_custkey"), col("c_nationkey"))
+    val enriched = eventsStream(s, dir, raw)
+      .filter(col("event_type") === "purchase")
+      .join(dim, col("user_id") === col("c_custkey")) // static side broadcasts
+    drainToTable(s, "q89_stream_static", "append")(enriched)
+      .groupBy(col("c_nationkey"))
+      .agg(count(lit(1)).as("n_purchases"),
+        round(sum(col("value")), 4).as("total_value"))
+      .orderBy("c_nationkey")
+  }
+
+  /** The event-time range of the stream-stream join matrix: a click
+    * (`c_user_id`, `c_ts`) joins a purchase (`pUser`, `p_ts`) of the
+    * same user within the preceding 10 minutes.
+    */
+  private def clickInRange(pUser: String): Column =
+    col(pUser) === col("c_user_id") &&
+      col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
+      col("c_ts") <= col("p_ts")
+
+  /** One side of the sentinel-flushed stream-stream joins (q126, q265,
+    * q266, q270): the `kind` events plus the sentinel, renamed per
+    * side and watermarked at the 10-minute join range. The sentinel
+    * rides both sides so both watermarks advance and the final no-data
+    * batch drains every join buffer; sentinel rows (user_id −1) match
+    * only each other and are dropped in the sink-side rollup.
+    */
+  private def joinSide(s: SparkSession, dir: String, kind: String,
+      idAs: String, userAs: String, tsAs: String): DataFrame = {
+    val raw = eventsSchema(s, dir)
+    flushedEvents(s, dir, raw)
+      .filter(col("event_type") === kind || col("event_type") === "__flush__")
+      .select(col("event_id").as(idAs), col("user_id").as(userAs),
+        timestamp_seconds(tsSeconds(raw)).as(tsAs))
+      .withWatermark(tsAs, "10 minutes")
+  }
 
   /** Stream-stream inner join with event-time range: each purchase
     * matched to the same user's clicks in the preceding 10 minutes,
@@ -380,88 +419,47 @@ object StreamingQueries {
     * inner join. For multi-file inputs, size the watermark to the join
     * range PLUS the max cross-batch disorder.
     */
-  def q65StreamJoin(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q65_stream_join_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q65")
-      def side(kind: String, idAs: String, tsAs: String) =
-        eventsStream(s, dir, raw)
-          .filter(col("event_type") === kind)
-          .select(col("event_id").as(idAs), col("user_id"),
-            timestamp_seconds(tsSeconds(raw)).as(tsAs))
-          .withWatermark(tsAs, "10 minutes")
-      val purchases = side("purchase", "p_id", "p_ts")
-      val clicks = side("click", "c_id", "c_ts")
-        .withColumnRenamed("user_id", "c_user_id")
-      val q = purchases.join(clicks,
-          col("user_id") === col("c_user_id") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-            col("c_ts") <= col("p_ts"))
-        .select(col("user_id"), col("p_id"), col("c_id"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_pairs"))
-        .orderBy("user_id")
-    }
+  def q65StreamJoin(s: SparkSession, dir: String): DataFrame = {
+    val raw = eventsSchema(s, dir)
+    def side(kind: String, idAs: String, tsAs: String) =
+      eventsStream(s, dir, raw)
+        .filter(col("event_type") === kind)
+        .select(col("event_id").as(idAs), col("user_id"),
+          timestamp_seconds(tsSeconds(raw)).as(tsAs))
+        .withWatermark(tsAs, "10 minutes")
+    val purchases = side("purchase", "p_id", "p_ts")
+    val clicks = side("click", "c_id", "c_ts")
+      .withColumnRenamed("user_id", "c_user_id")
+    val pairs = purchases.join(clicks, clickInRange("user_id"))
+      .select(col("user_id"), col("p_id"), col("c_id"))
+    drainToTable(s, "q65_stream_join", "append")(pairs)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_pairs"))
+      .orderBy("user_id")
+  }
 
   /** Stream-stream LEFT OUTER join with event-time bounds: q65's shape,
     * but unmatched purchases must ALSO emit (with NULL click id) — and
     * in Structured Streaming that emission is a state-eviction side
     * effect: a purchase is declared unmatched only when the watermark
     * passes the end of its join window. The sentinel flush therefore
-    * rides BOTH sides, so every pending purchase's window closes and
-    * the final no-data batch drains the outer state (without it, the
-    * trailing ~10 minutes of purchases would simply never appear —
-    * correct streaming semantics, silently unequal to the batch left
-    * join). Sentinel rows (user_id −1) join only each other and are
-    * dropped in the sink-side aggregation.
+    * rides BOTH sides ([[joinSide]]), so every pending purchase's
+    * window closes and the final no-data batch drains the outer state
+    * (without it, the trailing ~10 minutes of purchases would simply
+    * never appear — correct streaming semantics, silently unequal to
+    * the batch left join).
     */
-  def q126StreamOuter(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q126_stream_outer_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q126")
-      val (_, flushDir) = sentinelFor(s, dir)
-      def side(kind: String, idAs: String, userAs: String, tsAs: String) = {
-        val events = eventsStream(s, dir, raw)
-        val flush = s.readStream.schema(raw).parquet(flushDir)
-        events.unionByName(flush)
-          .filter(col("event_type") === kind || col("event_type") === "__flush__")
-          .select(col("event_id").as(idAs), col("user_id").as(userAs),
-            timestamp_seconds(tsSeconds(raw)).as(tsAs))
-          .withWatermark(tsAs, "10 minutes")
-      }
-      val purchases = side("purchase", "p_id", "user_id", "p_ts")
-      val clicks = side("click", "c_id", "c_user_id", "c_ts")
-      val q = purchases.join(clicks,
-          col("user_id") === col("c_user_id") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-            col("c_ts") <= col("p_ts"),
-          "left_outer")
-        .select(col("user_id"), col("p_id"), col("c_id"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .filter(col("user_id") =!= -1L)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_rows"), count(col("c_id")).as("n_matched"))
-        .orderBy("user_id")
-    }
+  def q126StreamOuter(s: SparkSession, dir: String): DataFrame = {
+    val purchases = joinSide(s, dir, "purchase", "p_id", "user_id", "p_ts")
+    val clicks = joinSide(s, dir, "click", "c_id", "c_user_id", "c_ts")
+    val rows = purchases.join(clicks, clickInRange("user_id"), "left_outer")
+      .select(col("user_id"), col("p_id"), col("c_id"))
+    drainToTable(s, "q126_stream_outer", "append")(rows)
+      .filter(col("user_id") =!= -1L)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_rows"), count(col("c_id")).as("n_matched"))
+      .orderBy("user_id")
+  }
 
   /** Stream-stream FULL OUTER join with event-time bounds — q126's
     * missing twin, closing the streaming join matrix: unmatched rows
@@ -469,53 +467,25 @@ object StreamingQueries {
     * state-eviction side effect on ITS OWN buffer (an unmatched click
     * emits when the watermark passes the end of the windows it could
     * still join into, an unmatched purchase likewise). The sentinel
-    * flush rides both sides so both buffers drain; sentinel rows
-    * (user_id −1) match only each other and are dropped in the
-    * sink-side rollup. The per-user rollup counts total emitted rows
-    * and the non-NULL count per side, which pins all three emission
-    * classes (pair / purchase-only / click-only) against the batch
-    * full join.
+    * flush rides both sides so both buffers drain. The per-user rollup
+    * counts total emitted rows and the non-NULL count per side, which
+    * pins all three emission classes (pair / purchase-only /
+    * click-only) against the batch full join.
     */
-  def q265StreamFullOuter(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q265_stream_full_outer_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q265")
-      val (_, flushDir) = sentinelFor(s, dir)
-      def side(kind: String, idAs: String, userAs: String, tsAs: String) = {
-        val events = eventsStream(s, dir, raw)
-        val flush = s.readStream.schema(raw).parquet(flushDir)
-        events.unionByName(flush)
-          .filter(col("event_type") === kind || col("event_type") === "__flush__")
-          .select(col("event_id").as(idAs), col("user_id").as(userAs),
-            timestamp_seconds(tsSeconds(raw)).as(tsAs))
-          .withWatermark(tsAs, "10 minutes")
-      }
-      val purchases = side("purchase", "p_id", "p_user_id", "p_ts")
-      val clicks = side("click", "c_id", "c_user_id", "c_ts")
-      val q = purchases.join(clicks,
-          col("p_user_id") === col("c_user_id") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-            col("c_ts") <= col("p_ts"),
-          "full_outer")
-        .select(coalesce(col("p_user_id"), col("c_user_id")).as("user_id"),
-          col("p_id"), col("c_id"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .filter(col("user_id") =!= -1L)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("p_id")).as("n_purchases"),
-          count(col("c_id")).as("n_clicks"))
-        .orderBy("user_id")
-    }
+  def q265StreamFullOuter(s: SparkSession, dir: String): DataFrame = {
+    val purchases = joinSide(s, dir, "purchase", "p_id", "p_user_id", "p_ts")
+    val clicks = joinSide(s, dir, "click", "c_id", "c_user_id", "c_ts")
+    val rows = purchases.join(clicks, clickInRange("p_user_id"), "full_outer")
+      .select(coalesce(col("p_user_id"), col("c_user_id")).as("user_id"),
+        col("p_id"), col("c_id"))
+    drainToTable(s, "q265_stream_full_outer", "append")(rows)
+      .filter(col("user_id") =!= -1L)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_rows"),
+        count(col("p_id")).as("n_purchases"),
+        count(col("c_id")).as("n_clicks"))
+      .orderBy("user_id")
+  }
 
   /** Stream-stream RIGHT OUTER join — the last cell of the streaming
     * join matrix (inner q65, left q126, full q265): unmatched CLICKS
@@ -524,44 +494,18 @@ object StreamingQueries {
     * as q126 (both sides' watermarks must advance for the right
     * buffer to drain).
     */
-  def q266StreamRightOuter(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q266_stream_right_outer_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q266")
-      val (_, flushDir) = sentinelFor(s, dir)
-      def side(kind: String, idAs: String, userAs: String, tsAs: String) = {
-        val events = eventsStream(s, dir, raw)
-        val flush = s.readStream.schema(raw).parquet(flushDir)
-        events.unionByName(flush)
-          .filter(col("event_type") === kind || col("event_type") === "__flush__")
-          .select(col("event_id").as(idAs), col("user_id").as(userAs),
-            timestamp_seconds(tsSeconds(raw)).as(tsAs))
-          .withWatermark(tsAs, "10 minutes")
-      }
-      val purchases = side("purchase", "p_id", "p_user_id", "p_ts")
-      val clicks = side("click", "c_id", "c_user_id", "c_ts")
-      val q = purchases.join(clicks,
-          col("p_user_id") === col("c_user_id") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-            col("c_ts") <= col("p_ts"),
-          "right_outer")
-        .select(col("c_user_id").as("user_id"), col("p_id"), col("c_id"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .filter(col("user_id") =!= -1L)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_rows"),
-          count(col("p_id")).as("n_matched"))
-        .orderBy("user_id")
-    }
+  def q266StreamRightOuter(s: SparkSession, dir: String): DataFrame = {
+    val purchases = joinSide(s, dir, "purchase", "p_id", "p_user_id", "p_ts")
+    val clicks = joinSide(s, dir, "click", "c_id", "c_user_id", "c_ts")
+    val rows = purchases.join(clicks, clickInRange("p_user_id"), "right_outer")
+      .select(col("c_user_id").as("user_id"), col("p_id"), col("c_id"))
+    drainToTable(s, "q266_stream_right_outer", "append")(rows)
+      .filter(col("user_id") =!= -1L)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_rows"),
+        count(col("p_id")).as("n_matched"))
+      .orderBy("user_id")
+  }
 
   /** Stream-stream LEFT SEMI join — the existence-test cell of the
     * streaming join matrix (inner q65, left q126, full q265, right
@@ -572,46 +516,19 @@ object StreamingQueries {
     * The sentinel flush rides both sides so the final no-data batch
     * drains all buffered state (semi output is match-driven, but the
     * drain keeps the run's state footprint zero at stop, the same
-    * discipline as the outer cells); sentinel rows (user_id −1) match
-    * only each other and are dropped in the sink-side rollup.
+    * discipline as the outer cells).
     */
-  def q270StreamSemi(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q270_stream_semi_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q270")
-      val (_, flushDir) = sentinelFor(s, dir)
-      def side(kind: String, idAs: String, userAs: String, tsAs: String) = {
-        val events = eventsStream(s, dir, raw)
-        val flush = s.readStream.schema(raw).parquet(flushDir)
-        events.unionByName(flush)
-          .filter(col("event_type") === kind || col("event_type") === "__flush__")
-          .select(col("event_id").as(idAs), col("user_id").as(userAs),
-            timestamp_seconds(tsSeconds(raw)).as(tsAs))
-          .withWatermark(tsAs, "10 minutes")
-      }
-      val purchases = side("purchase", "p_id", "user_id", "p_ts")
-      val clicks = side("click", "c_id", "c_user_id", "c_ts")
-      val q = purchases.join(clicks,
-          col("user_id") === col("c_user_id") &&
-            col("c_ts") >= col("p_ts") - expr("INTERVAL 10 MINUTES") &&
-            col("c_ts") <= col("p_ts"),
-          "left_semi")
-        .select(col("user_id"), col("p_id"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .filter(col("user_id") =!= -1L)
-        .groupBy(col("user_id"))
-        .agg(count(lit(1)).as("n_semi"))
-        .orderBy("user_id")
-    }
+  def q270StreamSemi(s: SparkSession, dir: String): DataFrame = {
+    val purchases = joinSide(s, dir, "purchase", "p_id", "user_id", "p_ts")
+    val clicks = joinSide(s, dir, "click", "c_id", "c_user_id", "c_ts")
+    val rows = purchases.join(clicks, clickInRange("user_id"), "left_semi")
+      .select(col("user_id"), col("p_id"))
+    drainToTable(s, "q270_stream_semi", "append")(rows)
+      .filter(col("user_id") =!= -1L)
+      .groupBy(col("user_id"))
+      .agg(count(lit(1)).as("n_semi"))
+      .orderBy("user_id")
+  }
 
   /** Orders-as-CDC log parquet per sf dir, written ONCE per JVM as 4
     * ts-range files so `maxFilesPerTrigger=1` under AvailableNow
@@ -625,7 +542,7 @@ object StreamingQueries {
     new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def cdcLogDir(s: SparkSession, dir: String): String =
     cdcLogCache.computeIfAbsent(dir, { d =>
-      val tmp = scratchCheckpoint("q274-log")
+      val tmp = scratchDir("q274-log")
       graft.engine.Tables(s, d, "orders")
         .filter(col("o_orderkey") % 5 === 0)
         .select(col("o_custkey").as("k"),
@@ -653,24 +570,17 @@ object StreamingQueries {
     * in IncrementalAggSpec.
     */
   def q274IvmRetract(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val logDir = cdcLogDir(s, dir)
-      val store = scratchCheckpoint("q274-store")
-      val ckpt = scratchCheckpoint("q274")
+    withCheckpoint(s, "q274_ivm_retract") { ckpt =>
+      val store = scratchDir("q274-store")
       val schema = StructType(Seq(
         StructField("k", LongType), StructField("tso", LongType),
         StructField("op", StringType), StructField("grp", LongType),
         StructField("cents", LongType)))
-      val q = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(logDir)
+      drain(ckpt)(s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", 1).parquet(cdcLogDir(s, dir))
         .writeStream
         .foreachBatch(graft.streaming.IncrementalAgg.mergeRetract(
-          store, "k", "tso", "op", "grp", "cents") _)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
+          store, "k", "tso", "op", "grp", "cents") _))
       graft.streaming.IncrementalAgg.read(s, s"$store/agg", Seq("grp"))
         .select(col("grp"), col("cnt"), col("total").as("total_cents"))
         .orderBy("grp")
@@ -684,6 +594,19 @@ object StreamingQueries {
     event_id: Long, ts_s: java.sql.Timestamp)
   private[queries] case class SessState(lastTs: Long, n: Long)
   private[queries] case class SessOut(user_id: Long, n_sessions: Long)
+
+  /** The sentinel-flushed events as [[SessEv]] rows watermarked 2 h on
+    * `ts_s`, the input of both typed sessionize twins.
+    */
+  private def sessEvents(s: SparkSession, dir: String): Dataset[SessEv] = {
+    val raw = eventsSchema(s, dir)
+    flushedEvents(s, dir, raw)
+      .withColumn("ts_s", timestamp_seconds(tsSeconds(raw)))
+      .withWatermark("ts_s", "2 hours")
+      .select(col("user_id"), tsSeconds(raw).as("ts_sec"),
+        col("event_id"), col("ts_s"))
+      .as(org.apache.spark.sql.Encoders.product[SessEv])
+  }
 
   /** Per-user session fold: count a new session when the gap from the
     * last seen event exceeds `gapSec` (strictly — an exact-gap tie
@@ -733,43 +656,16 @@ object StreamingQueries {
     * there. Oracle = the identical batch q25_sessionize SQL — THE
     * equivalence contract.
     */
-  def q100SessionizeState(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-      val raw = eventsSchema(s, dir)
-      val name = s"q100_sess_state_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q100")
-      val (_, flushDir) = sentinelFor(s, dir)
-      val events = eventsStream(s, dir, raw)
-      val flush = s.readStream.schema(raw).parquet(flushDir)
-      // NOTE the sentinel is NOT filtered inside the stream: a
-      // `user_id =!= -1` here gets PUSHED INTO the parquet scan, whose
-      // row-group stats (min=max=-1) then skip the sentinel file
-      // entirely — the row never reaches the EventTimeWatermark node
-      // and the final timeouts never fire. It flows through as its own
-      // group instead (its timeout stamp stays past the final
-      // watermark, so it never emits) and is filtered from the OUTPUT,
-      // the same pattern as q25Stream.
-      val evs = events.unionByName(flush)
-        .withColumn("ts_s", timestamp_seconds(tsSeconds(raw)))
-        .withWatermark("ts_s", "2 hours")
-        .select(col("user_id"), tsSeconds(raw).as("ts_sec"),
-          col("event_id"), col("ts_s"))
-        .as[SessEv]
-      val sessions = evs.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout)(sessFold(1800L))
-      val q = sessions.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name).filter(col("user_id") =!= -1L).orderBy("user_id")
-    }
+  def q100SessionizeState(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    // the sentinel flows through as its own group (see flushedEvents)
+    val sessions = sessEvents(s, dir).groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout)(sessFold(1800L))
+    drainToTable(s, "q100_sessionize_state", "append")(sessions)
+      .filter(col("user_id") =!= -1L).orderBy("user_id")
+  }
 
   /** [[q197SessionizeTws]]'s processor: q100's sessionize fold ported
     * to Spark 4's `transformWithState` API — ValueState replaces the
@@ -827,45 +723,15 @@ object StreamingQueries {
     * [[q100SessionizeState]].
     */
   def q197SessionizeTws(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
+    withConf(s, "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider") {
       import s.implicits._
       import org.apache.spark.sql.streaming.{OutputMode, TimeMode}
-      val providerKey = "spark.sql.streaming.stateStore.providerClass"
-      val prior = s.conf.getOption(providerKey)
-      s.conf.set(providerKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try {
-        val raw = eventsSchema(s, dir)
-        val name = s"q197_sess_tws_${System.nanoTime()}"
-        val ckpt = scratchCheckpoint("q197")
-        val (_, flushDir) = sentinelFor(s, dir)
-        val events = eventsStream(s, dir, raw)
-        val flush = s.readStream.schema(raw).parquet(flushDir)
-        // sentinel NOT filtered inside the stream — q100's pushdown trap
-        val evs = events.unionByName(flush)
-          .withColumn("ts_s", timestamp_seconds(tsSeconds(raw)))
-          .withWatermark("ts_s", "2 hours")
-          .select(col("user_id"), tsSeconds(raw).as("ts_sec"),
-            col("event_id"), col("ts_s"))
-          .as[SessEv]
-        val sessions = evs.groupByKey(_.user_id)
-          .transformWithState(new SessTwsProcessor(1800L),
-            TimeMode.EventTime(), OutputMode.Append())
-        val q = sessions.writeStream
-          .format("memory").queryName(name)
-          .outputMode("append")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        deleteRecursively(ckpt)
-        s.table(name).filter(col("user_id") =!= -1L).orderBy("user_id")
-      } finally {
-        prior match {
-          case Some(v) => s.conf.set(providerKey, v)
-          case None => s.conf.unset(providerKey)
-        }
-      }
+      val sessions = sessEvents(s, dir).groupByKey(_.user_id)
+        .transformWithState(new SessTwsProcessor(1800L),
+          TimeMode.EventTime(), OutputMode.Append())
+      drainToTable(s, "q197_sessionize_tws", "append")(sessions)
+        .filter(col("user_id") =!= -1L).orderBy("user_id")
     }
 
   /** Typed rows/state/output for [[q164StreamFirstSeen]]. State per
@@ -914,46 +780,31 @@ object StreamingQueries {
     * the daily rollup then aggregates the emitted (day, is_new) pairs.
     * Oracle = the identical batch q163 SQL — the equivalence contract.
     */
-  def q164StreamFirstSeen(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-      val raw = eventsSchema(s, dir)
-      val name = s"q164_first_seen_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q164")
-      val (_, flushDir) = sentinelFor(s, dir)
-      val events = eventsStream(s, dir, raw)
-      val flush = s.readStream.schema(raw).parquet(flushDir)
-      // sentinel NOT filtered inside the stream (see q100's note on
-      // pushdown skipping the watermark); it rides as user -1 whose
-      // timeout never fires and is dropped from the OUTPUT
-      val evs = events.unionByName(flush)
-        .withColumn("ts_s", timestamp_seconds(tsSeconds(raw)))
-        .withWatermark("ts_s", "2 hours")
-        .select(col("user_id"),
-          (tsSeconds(raw) - (tsSeconds(raw) % lit(86400L)))
-            .as("day_sec"),
-          col("ts_s"))
-        .as[FsEv]
-      val marks = evs.groupByKey(_.user_id)
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout)(firstSeenFold)
-      val q = marks.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .filter(col("user_id") =!= -1L)
-        .groupBy(timestamp_seconds(col("day_sec")).cast("date")
-          .cast("string").as("day"))
-        .agg(sum(col("is_new")).as("new_users"),
-          sum(lit(1L) - col("is_new")).as("returning_users"))
-        .orderBy("day")
-    }
+  def q164StreamFirstSeen(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    val raw = eventsSchema(s, dir)
+    // the sentinel rides as user -1 whose timeout never fires and is
+    // dropped from the OUTPUT (see flushedEvents)
+    val evs = flushedEvents(s, dir, raw)
+      .withColumn("ts_s", timestamp_seconds(tsSeconds(raw)))
+      .withWatermark("ts_s", "2 hours")
+      .select(col("user_id"),
+        (tsSeconds(raw) - (tsSeconds(raw) % lit(86400L)))
+          .as("day_sec"),
+        col("ts_s"))
+      .as[FsEv]
+    val marks = evs.groupByKey(_.user_id)
+      .flatMapGroupsWithState(OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout)(firstSeenFold)
+    drainToTable(s, "q164_stream_first_seen", "append")(marks)
+      .filter(col("user_id") =!= -1L)
+      .groupBy(timestamp_seconds(col("day_sec")).cast("date")
+        .cast("string").as("day"))
+      .agg(sum(col("is_new")).as("new_users"),
+        sum(lit(1L) - col("is_new")).as("returning_users"))
+      .orderBy("day")
+  }
 
   /** Typed rows/state/output for [[q219StreamThrottle]]. State per
     * (user, type) = the buffered (sec, event_id) arrivals inside the
@@ -1007,41 +858,27 @@ object StreamingQueries {
     * by its own timeout; the rollup aggregates the emitted kept flags.
     * Oracle = the identical batch q217 SQL — the equivalence contract.
     */
-  def q219StreamThrottle(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      import s.implicits._
-      import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
-      val raw = eventsSchema(s, dir)
-      val name = s"q219_throttle_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q219")
-      val (_, flushDir) = sentinelFor(s, dir)
-      val events = eventsStream(s, dir, raw)
-      val flush = s.readStream.schema(raw).parquet(flushDir)
-      // sentinel rides as user -1 (timeout never fires — its event time
-      // stays ahead of the watermark) and is dropped from the OUTPUT
-      val evs = events.unionByName(flush)
-        .withColumn("ts_s", timestamp_seconds(tsSeconds(raw)))
-        .withWatermark("ts_s", "2 hours")
-        .select(col("user_id"), col("event_type"),
-          tsSeconds(raw).as("sec"), col("event_id"), col("ts_s"))
-        .as[ThEv]
-      val marks = evs.groupByKey(r => (r.user_id, r.event_type))
-        .flatMapGroupsWithState(OutputMode.Append(),
-          GroupStateTimeout.EventTimeTimeout)(throttleFold)
-      val q = marks.writeStream
-        .format("memory").queryName(name)
-        .outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .filter(col("user_id") =!= -1L)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_total"), sum(col("kept")).as("n_kept"))
-        .orderBy("event_type")
-    }
+  def q219StreamThrottle(s: SparkSession, dir: String): DataFrame = {
+    import s.implicits._
+    import org.apache.spark.sql.streaming.{GroupStateTimeout, OutputMode}
+    val raw = eventsSchema(s, dir)
+    // the sentinel rides as user -1 (timeout never fires — its event
+    // time stays ahead of the watermark) and is dropped from the OUTPUT
+    val evs = flushedEvents(s, dir, raw)
+      .withColumn("ts_s", timestamp_seconds(tsSeconds(raw)))
+      .withWatermark("ts_s", "2 hours")
+      .select(col("user_id"), col("event_type"),
+        tsSeconds(raw).as("sec"), col("event_id"), col("ts_s"))
+      .as[ThEv]
+    val marks = evs.groupByKey(r => (r.user_id, r.event_type))
+      .flatMapGroupsWithState(OutputMode.Append(),
+        GroupStateTimeout.EventTimeTimeout)(throttleFold)
+    drainToTable(s, "q219_stream_throttle", "append")(marks)
+      .filter(col("user_id") =!= -1L)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_total"), sum(col("kept")).as("n_kept"))
+      .orderBy("event_type")
+  }
 
   /** Stream-maintained UPSERT view (SCD1 from an append stream): the
     * events stream keeps a parquet-backed latest-event-per-user
@@ -1053,20 +890,14 @@ object StreamingQueries {
     * the full-history window.
     */
   def q227StreamUpsert(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
+    withCheckpoint(s, "q227_stream_upsert") { ckpt =>
       val raw = eventsSchema(s, dir)
-      val store = scratchCheckpoint("q227-store")
-      val ckpt = scratchCheckpoint("q227")
-      val events = eventsStream(s, dir, raw)
+      val store = scratchDir("q227-store")
+      drain(ckpt)(eventsStream(s, dir, raw)
         .withColumn("sec", tsSeconds(raw))
-      val q = events.writeStream
+        .writeStream
         .foreachBatch(graft.streaming.IncrementalAgg.mergeLatest(
-          store, "user_id", Seq("sec", "event_id"), Seq("event_type")) _)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
+          store, "user_id", Seq("sec", "event_id"), Seq("event_type")) _))
       graft.streaming.IncrementalAgg.read(s, store, Seq("user_id"))
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_users"))
@@ -1083,19 +914,12 @@ object StreamingQueries {
     * IncrementalAggSpec).
     */
   def q106IncrementalView(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
+    withCheckpoint(s, "q106_incremental_view") { ckpt =>
       val raw = eventsSchema(s, dir)
-      val store = scratchCheckpoint("q106-store")
-      val ckpt = scratchCheckpoint("q106")
-      val events = eventsStream(s, dir, raw)
-      val q = events.writeStream
+      val store = scratchDir("q106-store")
+      drain(ckpt)(eventsStream(s, dir, raw).writeStream
         .foreachBatch(graft.streaming.IncrementalAgg
-          .mergeCountSum(store, Seq("event_type"), "value") _)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
+          .mergeCountSum(store, Seq("event_type"), "value") _))
       graft.streaming.IncrementalAgg.read(s, store, Seq("event_type"))
         .select(col("event_type"), col("cnt"),
           round(col("total"), 4).as("total"))
@@ -1112,40 +936,29 @@ object StreamingQueries {
     * must equal the batch sketch bit-for-bit — same md5 hash space, so
     * the DuckDB oracle recomputes estimate AND threshold exactly.
     */
-  def q176StreamKmv(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q176_stream_kmv_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q176")
-      val agg = udaf(new graft.operators.Kmv.KmvAgg(64),
-        org.apache.spark.sql.Encoders.scalaLong)
-      val events = eventsStream(s, dir, raw)
-      val q = events
-        .withColumn("ts_t", tsTimestamp(raw))
-        .select(col("event_type"),
-          graft.operators.Kmv.hash60(concat_ws("|", col("user_id"),
-            date_format(col("ts_t"), "yyyy-MM-dd"))).as("h"))
-        .groupBy(col("event_type"))
-        .agg(agg(col("h")).as("mins"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      val k = 64
-      s.table(name).select(col("event_type"),
-          size(col("mins")).cast("bigint").as("n_kept"),
-          when(size(col("mins")) >= k, element_at(col("mins"), k))
-            .otherwise(lit(null).cast("bigint")).as("kth_hash"),
-          when(size(col("mins")) < k, size(col("mins")).cast("double"))
-            .otherwise(round(lit((k - 1).toDouble) *
-              lit(graft.operators.Kmv.SpaceSize) /
-              element_at(col("mins"), k).cast("double"), 4)).as("est"))
-        .orderBy("event_type")
-    }
+  def q176StreamKmv(s: SparkSession, dir: String): DataFrame = {
+    val raw = eventsSchema(s, dir)
+    val k = 64
+    val agg = udaf(new graft.operators.Kmv.KmvAgg(k),
+      org.apache.spark.sql.Encoders.scalaLong)
+    val sketches = eventsStream(s, dir, raw)
+      .withColumn("ts_t", tsTimestamp(raw))
+      .select(col("event_type"),
+        graft.operators.Kmv.hash60(concat_ws("|", col("user_id"),
+          date_format(col("ts_t"), "yyyy-MM-dd"))).as("h"))
+      .groupBy(col("event_type"))
+      .agg(agg(col("h")).as("mins"))
+    drainToTable(s, "q176_stream_kmv", "complete")(sketches)
+      .select(col("event_type"),
+        size(col("mins")).cast("bigint").as("n_kept"),
+        when(size(col("mins")) >= k, element_at(col("mins"), k))
+          .otherwise(lit(null).cast("bigint")).as("kth_hash"),
+        when(size(col("mins")) < k, size(col("mins")).cast("double"))
+          .otherwise(round(lit((k - 1).toDouble) *
+            lit(graft.operators.Kmv.SpaceSize) /
+            element_at(col("mins"), k).cast("double"), 4)).as("est"))
+      .orderBy("event_type")
+  }
 
   /** Streaming twin of q243's A/B readout: the md5 arm assignment is a
     * stateless per-row transform (pure function of user_id), so the
@@ -1156,33 +969,25 @@ object StreamingQueries {
     * (same oracle), which certifies the experiment readout can move
     * from nightly batch to live without changing a number.
     */
-  def q253StreamAb(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q253_stream_ab_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q253")
-      val events = eventsStream(s, dir, raw)
-      val arm = when(substring(md5(col("user_id").cast("string")
-          .cast("binary")), 1, 1)
-        .isin("0", "1", "2", "3", "4", "5", "6", "7"), "A").otherwise("B")
-      val q = events
-        .withColumn("arm", arm)
-        .groupBy(col("arm"), col("user_id"))
-        .agg(sum((col("event_type") === "click").cast("long")).as("clicks"),
-          sum((col("event_type") === "purchase").cast("long"))
-            .as("purchases"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name).groupBy(col("arm"))
-        .agg(count(lit(1)).as("n_users"), sum(col("clicks")).as("clicks"),
-          sum(col("purchases")).as("purchases"))
-        .withColumn("purchases_per_kuser",
-          expr("purchases * 1000 div n_users"))
-        .orderBy("arm")
-    }
+  def q253StreamAb(s: SparkSession, dir: String): DataFrame = {
+    val raw = eventsSchema(s, dir)
+    val arm = when(substring(md5(col("user_id").cast("string")
+        .cast("binary")), 1, 1)
+      .isin("0", "1", "2", "3", "4", "5", "6", "7"), "A").otherwise("B")
+    val perUser = eventsStream(s, dir, raw)
+      .withColumn("arm", arm)
+      .groupBy(col("arm"), col("user_id"))
+      .agg(sum((col("event_type") === "click").cast("long")).as("clicks"),
+        sum((col("event_type") === "purchase").cast("long"))
+          .as("purchases"))
+    drainToTable(s, "q253_stream_ab", "complete")(perUser)
+      .groupBy(col("arm"))
+      .agg(count(lit(1)).as("n_users"), sum(col("clicks")).as("clicks"),
+        sum(col("purchases")).as("purchases"))
+      .withColumn("purchases_per_kuser",
+        expr("purchases * 1000 div n_users"))
+      .orderBy("arm")
+  }
 
   /** Streaming twin of q252's quantile sketch: the bottom-k-by-hash
     * sample absorbs each micro-batch through the same merge the batch
@@ -1192,37 +997,28 @@ object StreamingQueries {
     * yield the exact same p50/p90 estimates as the batch sketch, so
     * the oracle is shared.
     */
-  def q254StreamSampleQuantiles(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q254_stream_sample_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q254")
-      val agg = udaf(new graft.operators.Kmv.SampleAgg(512),
-        org.apache.spark.sql.Encoders.product[graft.operators.Kmv.HV])
-      val events = eventsStream(s, dir, raw)
-      val q = events
-        .select(col("event_type"),
-          graft.operators.Kmv.hash60(col("event_id")).as("h"),
-          col("value").as("v"))
-        .groupBy(col("event_type"))
-        .agg(agg(col("h"), col("v")).as("sample"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      val est = s.table(name)
-        .select(col("event_type"), explode(col("sample")).as("smp"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_sample"),
-          round(expr("percentile(smp.v, 0.5)"), 4).as("est_p50"),
-          round(expr("percentile(smp.v, 0.9)"), 4).as("est_p90"))
-      val exact = graft.engine.Tables(s, dir, "events")
-        .groupBy(col("event_type"))
-        .agg(round(expr("percentile(value, 0.5)"), 4).as("exact_p50"),
-          round(expr("percentile(value, 0.9)"), 4).as("exact_p90"))
-      est.join(exact, Seq("event_type")).orderBy("event_type")
-    }
+  def q254StreamSampleQuantiles(s: SparkSession, dir: String): DataFrame = {
+    val raw = eventsSchema(s, dir)
+    val agg = udaf(new graft.operators.Kmv.SampleAgg(512),
+      org.apache.spark.sql.Encoders.product[graft.operators.Kmv.HV])
+    val samples = eventsStream(s, dir, raw)
+      .select(col("event_type"),
+        graft.operators.Kmv.hash60(col("event_id")).as("h"),
+        col("value").as("v"))
+      .groupBy(col("event_type"))
+      .agg(agg(col("h"), col("v")).as("sample"))
+    val est = drainToTable(s, "q254_stream_sample", "complete")(samples)
+      .select(col("event_type"), explode(col("sample")).as("smp"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_sample"),
+        round(expr("percentile(smp.v, 0.5)"), 4).as("est_p50"),
+        round(expr("percentile(smp.v, 0.9)"), 4).as("est_p90"))
+    val exact = graft.engine.Tables(s, dir, "events")
+      .groupBy(col("event_type"))
+      .agg(round(expr("percentile(value, 0.5)"), 4).as("exact_p50"),
+        round(expr("percentile(value, 0.9)"), 4).as("exact_p90"))
+    est.join(exact, Seq("event_type")).orderBy("event_type")
+  }
 
   /** Streaming dataset fingerprint: q181's order-invariant XOR
     * checksum maintained INCREMENTALLY per event_type — XOR is
@@ -1234,27 +1030,17 @@ object StreamingQueries {
     * stream — the cheapest possible "did the replay produce the same
     * dataset" monitor on an ingest pipeline.
     */
-  def q185StreamFingerprint(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q185_fp_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q185")
-      val q = eventsStream(s, dir, raw)
-        .select(col("event_type"),
-          graft.operators.Kmv.hash60(
-            concat_ws("|", col("event_id"), col("user_id"))).as("h"))
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n_events"), expr("bit_xor(h)").as("fp"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name).orderBy("event_type")
-    }
+  def q185StreamFingerprint(s: SparkSession, dir: String): DataFrame = {
+    val raw = eventsSchema(s, dir)
+    val fingerprints = eventsStream(s, dir, raw)
+      .select(col("event_type"),
+        graft.operators.Kmv.hash60(
+          concat_ws("|", col("event_id"), col("user_id"))).as("h"))
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n_events"), expr("bit_xor(h)").as("fp"))
+    drainToTable(s, "q185_stream_fingerprint", "complete")(fingerprints)
+      .orderBy("event_type")
+  }
 
   /** Streaming heavy hitters — q131's two-pass design with the
     * candidate pass run INCREMENTALLY: the Misra-Gries summary is a
@@ -1270,37 +1056,26 @@ object StreamingQueries {
     * map, constant over an unbounded stream — the streaming "which
     * keys exceed x% of all traffic" monitor.
     */
-  def q193StreamTopk(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val name = s"q193_topk_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q193")
-      val fraction = 0.028
-      val cap = math.ceil(1.0 / fraction).toInt - 1 // 35 < the 37-key domain
-      val mg = udaf(new graft.operators.HeavyHitters.MisraGries(cap),
-        org.apache.spark.sql.Encoders.STRING)
-      val q = eventsStream(s, dir, raw)
-        .select((col("user_id") % 37).cast("string").as("k"))
-        .agg(mg(col("k")).as("cand"), count(lit(1)).as("n"))
-        .writeStream
-        .format("memory").queryName(name)
-        .outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      val cand = s.table(name)
-        .select(explode(col("cand")).as("k"), col("n"))
-      graft.engine.Tables(s, dir, "events")
-        .select((col("user_id") % 37).cast("string").as("k"))
-        .join(broadcast(cand), "k")
-        .groupBy(col("k"), col("n"))
-        .agg(count(lit(1)).as("cnt"))
-        .filter(col("cnt") > col("n") * fraction)
-        .select(col("k").as("key"), col("cnt"))
-        .orderBy("key")
-    }
+  def q193StreamTopk(s: SparkSession, dir: String): DataFrame = {
+    val raw = eventsSchema(s, dir)
+    val fraction = 0.028
+    val cap = math.ceil(1.0 / fraction).toInt - 1 // 35 < the 37-key domain
+    val mg = udaf(new graft.operators.HeavyHitters.MisraGries(cap),
+      org.apache.spark.sql.Encoders.STRING)
+    val summary = eventsStream(s, dir, raw)
+      .select((col("user_id") % 37).cast("string").as("k"))
+      .agg(mg(col("k")).as("cand"), count(lit(1)).as("n"))
+    val cand = drainToTable(s, "q193_stream_topk", "complete")(summary)
+      .select(explode(col("cand")).as("k"), col("n"))
+    graft.engine.Tables(s, dir, "events")
+      .select((col("user_id") % 37).cast("string").as("k"))
+      .join(broadcast(cand), "k")
+      .groupBy(col("k"), col("n"))
+      .agg(count(lit(1)).as("cnt"))
+      .filter(col("cnt") > col("n") * fraction)
+      .select(col("k").as("key"), col("cnt"))
+      .orderBy("key")
+  }
 
   /** Streaming-maintained zone map: the ingest loop lands each
     * micro-batch in its own `batch=<id>` partition AND upserts that
@@ -1312,25 +1087,17 @@ object StreamingQueries {
     * index current without ever recomputing it over the table.
     */
   def q196StreamZonemap(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
+    withCheckpoint(s, "q196_stream_zonemap") { ckpt =>
       val raw = eventsSchema(s, dir)
-      val ckpt = scratchCheckpoint("q196")
-      val dataDir = java.nio.file.Files
-        .createTempDirectory("graft-szm-data-").toString
-      val statsDir = java.nio.file.Files
-        .createTempDirectory("graft-szm-stats-").toString
-      val q = eventsStream(s, dir, raw)
+      val dataDir = scratchDir("q196-data")
+      val statsDir = scratchDir("q196-stats")
+      drain(ckpt)(eventsStream(s, dir, raw)
         .select(col("event_id"), col("user_id"), col("value"))
         .writeStream
         .foreachBatch { (df: DataFrame, id: Long) =>
           graft.operators.Layout.zoneMapAppend(
             s, df, dataDir, statsDir, id, Seq("user_id"))
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
+        })
       val zmap = graft.operators.Layout.zoneMapRead(s, statsDir)
       val (rows, _, _) = graft.operators.Layout.prunedRead(
         s, dataDir, zmap, "user_id", 3L, 7L)
@@ -1347,37 +1114,18 @@ object StreamingQueries {
     * are commutative merges, so stream == batch by construction, and
     * the oracle certifies the construction.
     */
-  def q301StreamClassifier(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      val name = s"q301_classifier_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q301")
-      val docs =
-        if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, "documents.parquet")))
-          s.readStream.schema(raw).parquet(dir + "/documents.parquet")
-        else
-          s.readStream.schema(raw)
-            .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val score = graft.functions.TextFunctions
-        .hashedNgramScore(col("text"), 2, 2001)
-      val q = docs.select(col("source"), score.as("score"))
-        .groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"),
-          sum(when(col("score") > 0, 1L).otherwise(0L)).as("n_pos"),
-          sum(col("score")).as("sum_score"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .select(col("source"), col("n_docs"), col("n_pos"), col("sum_score"))
-        .orderBy("source")
-    }
+  def q301StreamClassifier(s: SparkSession, dir: String): DataFrame = {
+    val score = graft.functions.TextFunctions
+      .hashedNgramScore(col("text"), 2, 2001)
+    val perSource = docsStream(s, dir).select(col("source"), score.as("score"))
+      .groupBy(col("source"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(when(col("score") > 0, 1L).otherwise(0L)).as("n_pos"),
+        sum(col("score")).as("sum_score"))
+    drainToTable(s, "q301_stream_classifier", "complete")(perSource)
+      .select(col("source"), col("n_docs"), col("n_pos"), col("sum_score"))
+      .orderBy("source")
+  }
 
   /** Streaming WARC ingest: the crawl-drop shape — shards LAND over
     * time and each micro-batch explodes its arrived `.warc`/`.warc.gz`
@@ -1387,50 +1135,56 @@ object StreamingQueries {
     * drained stream must equal the batch ingest bit-for-bit (shared
     * q298 oracle — XOR checksum over every payload byte).
     */
-  def q308StreamWarc(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val wdir = AnalyticsQueries.warcShardDir(s, dir)
-      val name = s"q308_warc_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q308")
-      val files = s.readStream.format("binaryFile")
-        .schema(StructType(Seq(
-          StructField("path", StringType),
-          StructField("modificationTime", TimestampType),
-          StructField("length", LongType),
-          StructField("content", BinaryType))))
-        .option("pathGlobFilter", "*.warc*")
-        .load(wdir)
-      val q = graft.sources.Warc.explodeRecords(files)
-        .filter(col("warc_type") === "response")
-        .select(
-          regexp_extract(col("target_uri"), "^http://ex/([a-z]+)/", 1)
-            .as("lang"),
-          regexp_extract(col("target_uri"), "/(\\d+)$", 1)
-            .cast("bigint").as("doc_id"),
-          col("content").cast("string").as("text"),
-          col("shard"))
-        // streaming aggregates per (lang, shard) — distinct counts are
-        // not streamable, but the per-shard partials are, and XOR
-        // checksums COMPOSE, so the batch rollup below reconstructs
-        // the exact per-lang manifest from the drained partials
-        .groupBy(col("lang"), col("shard"))
-        .agg(count(lit(1)).as("n"),
-          expr("bit_xor(CAST(" +
-            "conv(substring(md5(concat(doc_id, '|', text)), 1, 15), 16, 10)" +
-            " AS BIGINT))").as("ck"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .groupBy(col("lang"))
-        .agg(sum(col("n")).as("n_docs"),
-          count(lit(1)).as("n_shards"),
-          expr("bit_xor(ck)").as("checksum"))
-        .select(col("lang"), col("n_docs"), col("n_shards"), col("checksum"))
-        .orderBy("lang")
-    }
+  def q308StreamWarc(s: SparkSession, dir: String): DataFrame = {
+    val files = s.readStream.format("binaryFile")
+      .schema(StructType(Seq(
+        StructField("path", StringType),
+        StructField("modificationTime", TimestampType),
+        StructField("length", LongType),
+        StructField("content", BinaryType))))
+      .option("pathGlobFilter", "*.warc*")
+      .load(AnalyticsQueries.warcShardDir(s, dir))
+    val partials = graft.sources.Warc.explodeRecords(files)
+      .filter(col("warc_type") === "response")
+      .select(
+        regexp_extract(col("target_uri"), "^http://ex/([a-z]+)/", 1)
+          .as("lang"),
+        regexp_extract(col("target_uri"), "/(\\d+)$", 1)
+          .cast("bigint").as("doc_id"),
+        col("content").cast("string").as("text"),
+        col("shard"))
+      // streaming aggregates per (lang, shard) — distinct counts are
+      // not streamable, but the per-shard partials are, and XOR
+      // checksums COMPOSE, so the batch rollup below reconstructs
+      // the exact per-lang manifest from the drained partials
+      .groupBy(col("lang"), col("shard"))
+      .agg(count(lit(1)).as("n"),
+        expr("bit_xor(CAST(" +
+          "conv(substring(md5(concat(doc_id, '|', text)), 1, 15), 16, 10)" +
+          " AS BIGINT))").as("ck"))
+    drainToTable(s, "q308_stream_warc", "complete")(partials)
+      .groupBy(col("lang"))
+      .agg(sum(col("n")).as("n_docs"),
+        count(lit(1)).as("n_shards"),
+        expr("bit_xor(ck)").as("checksum"))
+      .select(col("lang"), col("n_docs"), col("n_shards"), col("checksum"))
+      .orderBy("lang")
+  }
+
+  /** The (event_id, user_id, event_type, cents) event stream the two
+    * exactly-once txlog writers ingest.
+    */
+  private def centsStream(s: SparkSession, dir: String): DataFrame =
+    eventsStream(s, dir, eventsSchema(s, dir))
+      .select(col("event_id"), col("user_id"), col("event_type"),
+        expr("CAST(ROUND(value * 100) AS BIGINT)").as("cents"))
+
+  /** The per-event_type count and cents total of the txlog table at `tdir`. */
+  private def centsRollup(s: SparkSession, tdir: String): DataFrame =
+    graft.operators.TxTable.snapshot(s, tdir)
+      .groupBy(col("event_type"))
+      .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
+      .orderBy("event_type")
 
   /** Exactly-once streaming ingestion into the transaction-log table:
     * each micro-batch commits as version batchId+1 via
@@ -1442,15 +1196,9 @@ object StreamingQueries {
     * contract.
     */
   def q313StreamTxlog(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val ckpt = scratchCheckpoint("q313")
-      val tdir = java.nio.file.Files
-        .createTempDirectory("graft-txstream-").toString
-      val q = eventsStream(s, dir, raw)
-        .select(col("event_id"), col("user_id"), col("event_type"),
-          expr("CAST(ROUND(value * 100) AS BIGINT)").as("cents"))
-        .writeStream
+    withCheckpoint(s, "q313_stream_txlog") { ckpt =>
+      val tdir = scratchDir("q313-table")
+      drain(ckpt)(centsStream(s, dir).writeStream
         .foreachBatch { (df: DataFrame, batchId: Long) =>
           val v = batchId.toInt + 1
           graft.operators.TxTable.commitAppendAt(df, tdir, v)
@@ -1458,15 +1206,8 @@ object StreamingQueries {
           val replayed = graft.operators.TxTable.commitAppendAt(df, tdir, v)
           require(!replayed, s"replay of batch $batchId double-committed")
           ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      graft.operators.TxTable.snapshot(s, tdir)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
-        .orderBy("event_type")
+        })
+      centsRollup(s, tdir)
     }
 
   /** The native `writeStream.format("txlog")` sink — q313's
@@ -1477,35 +1218,23 @@ object StreamingQueries {
     * the same location, so every batch re-delivers and every one must
     * no-op on the watermark (the version-keyed foreachBatch protocol
     * cannot survive this when other writers interleave; the watermark
-    * can). Same oracle as q313: the final snapshot equals the batch
-    * relation exactly, despite the double run.
+    * can). The location must be the same path, not a fresh one: the
+    * sink derives its app id from it. Same oracle as q313: the final
+    * snapshot equals the batch relation exactly, despite the double run.
     */
   def q361StreamTxlogSink(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = eventsSchema(s, dir)
-      val ckpt = scratchCheckpoint("q361")
-      val tdir = java.nio.file.Files
-        .createTempDirectory("graft-txsink-").toString
-      def drain(): Unit = {
-        val q = eventsStream(s, dir, raw)
-          .select(col("event_id"), col("user_id"), col("event_type"),
-            expr("CAST(ROUND(value * 100) AS BIGINT)").as("cents"))
-          .writeStream.format("txlog")
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start(tdir)
-        q.awaitTermination()
-      }
-      drain()
+    withCheckpoint(s, "q361_stream_txlog_sink") { ckpt =>
+      val tdir = scratchDir("q361-table")
+      def drainToTxlog(): Unit =
+        drain(ckpt)(centsStream(s, dir).writeStream
+          .format("txlog").option("path", tdir))
+      drainToTxlog()
       val v1 = graft.operators.TxTable.currentVersion(tdir)
       deleteRecursively(ckpt) // wipe the checkpoint: full replay
-      drain()
+      drainToTxlog()
       require(graft.operators.TxTable.currentVersion(tdir) == v1,
         "a replayed batch must not even commit a version")
-      deleteRecursively(ckpt)
-      graft.operators.TxTable.snapshot(s, tdir)
-        .groupBy(col("event_type"))
-        .agg(count(lit(1)).as("n"), sum(col("cents")).as("total_cents"))
-        .orderBy("event_type")
+      centsRollup(s, tdir)
     }
 
   /** The native `readStream.format("txlog")` SOURCE (Delta's
@@ -1519,20 +1248,18 @@ object StreamingQueries {
     * contract on the source side.
     */
   def q367StreamTxlogSource(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
+    withCheckpoint(s, "q367_stream_txlog_source") { ckpt =>
       val T = graft.operators.TxTable
-      val tdir = java.nio.file.Files
-        .createTempDirectory("graft-txsrc-").toString
+      val tdir = scratchDir("q367-table")
       val docs = graft.engine.Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
       T.commitAppend(docs.filter(col("doc_id") % 3 === 0), tdir)
       T.commitAppend(docs.filter(col("doc_id") % 3 === 1), tdir)
-      val ckpt = scratchCheckpoint("q367")
       val acc = java.util.Collections.synchronizedList(
         new java.util.ArrayList[(String, Long, Long)]())
-      def drain(): Long = {
+      def drainRows(): Long = {
         val n = new java.util.concurrent.atomic.AtomicLong()
-        val q = s.readStream.format("txlog").load(tdir)
+        drain(ckpt)(s.readStream.format("txlog").load(tdir)
           .writeStream
           .foreachBatch { (df: DataFrame, _: Long) =>
             df.groupBy(col("lang"))
@@ -1545,20 +1272,16 @@ object StreamingQueries {
                 ()
               }
             ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow()).start()
-        q.awaitTermination()
+          })
         n.get()
       }
-      drain() // initial snapshot (v1+v2)
+      drainRows() // initial snapshot (v1+v2)
       val tail = docs.filter(col("doc_id") % 3 === 2)
       T.commitAppend(tail, tdir)
-      val second = drain()
+      val second = drainRows() // resumes from the first drain's checkpoint
       require(second == tail.count(),
         s"the resumed drain must deliver exactly the new commit's " +
           s"rows, got $second")
-      deleteRecursively(ckpt)
       import scala.jdk.CollectionConverters._
       val partials = acc.asScala.toSeq
       s.createDataFrame(partials).toDF("lang", "n", "ck")
@@ -1582,17 +1305,14 @@ object StreamingQueries {
     * six data commits — a sweep never loses or duplicates a batch.
     */
   def q372StreamAutoCompact(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
+    withCheckpoint(s, "q372_stream_autocompact") { ckpt =>
       val T = graft.operators.TxTable
-      val src = java.nio.file.Files
-        .createTempDirectory("graft-txac-src-").toString
-      val sink = java.nio.file.Files
-        .createTempDirectory("graft-txac-sink-").toString
+      val src = scratchDir("q372-src")
+      val sink = scratchDir("q372-sink")
       val docs = graft.engine.Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
       (0 to 5).foreach(i =>
         T.commitAppend(docs.filter(col("doc_id") % 6 === i), src))
-      val ckpt = scratchCheckpoint("q372")
       val q = s.readStream.format("txlog")
         .option("startingVersion", "0")
         .option("maxVersionsPerTrigger", "1").load(src)
@@ -1603,7 +1323,6 @@ object StreamingQueries {
         .option("checkpointLocation", ckpt)
         .start(sink)
       q.processAllAvailable(); q.stop()
-      deleteRecursively(ckpt)
       val hist = T.historyFull(sink)
       val dataCommits = hist.count(_._4)
       val sweeps = hist.count(h => !h._4)
@@ -1630,27 +1349,18 @@ object StreamingQueries {
     * q319 oracle): stream == batch by construction, since both paths
     * run the same per-commit diff.
     */
-  def q322StreamCdf(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val tdir = AnalyticsQueries.txTableDir(s, dir)
-      val name = s"q322_cdf_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q322")
-      val q = s.readStream.format("txlog-cdf")
-        .option("fromVersion", "2")
-        .load(tdir)
-        .writeStream.format("memory").queryName(name)
-        .outputMode("append").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      s.table(name)
-        .groupBy(col("_commit_version").as("version"),
-          col("_change_type").as("change_type"))
-        .agg(count(lit(1)).as("n_rows"),
-          expr("bit_xor(CAST(conv(substring(md5(concat(doc_id, '|', "
-            + "text)), 1, 15), 16, 10) AS BIGINT))").as("checksum"))
-        .orderBy("version", "change_type")
-    }
+  def q322StreamCdf(s: SparkSession, dir: String): DataFrame = {
+    val feed = s.readStream.format("txlog-cdf")
+      .option("fromVersion", "2")
+      .load(AnalyticsQueries.txTableDir(s, dir))
+    drainToTable(s, "q322_stream_cdf", "append")(feed)
+      .groupBy(col("_commit_version").as("version"),
+        col("_change_type").as("change_type"))
+      .agg(count(lit(1)).as("n_rows"),
+        expr("bit_xor(CAST(conv(substring(md5(concat(doc_id, '|', "
+          + "text)), 1, 15), 16, 10) AS BIGINT))").as("checksum"))
+      .orderBy("version", "change_type")
+  }
 
   /** The q321 incremental view MAINTAINED BY A STREAM: the txlog-cdf
     * source feeds a stateful streaming aggregation (sum of +1/-1 row
@@ -1662,37 +1372,30 @@ object StreamingQueries {
     * consumer: refresh cost per trigger rides |changes|, never table
     * size, and restarts resume from checkpointed offsets.
     */
-  def q328StreamIvm(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val tdir = AnalyticsQueries.txTableDir(s, dir)
-      val name = s"q328_ivm_${System.nanoTime()}"
-      val ckpt = scratchCheckpoint("q328")
-      val q = s.readStream.format("txlog-cdf")
-        .option("fromVersion", "2")
-        .load(tdir)
-        .withColumn("sign",
-          when(col("_change_type") === "insert", 1L).otherwise(-1L))
-        .groupBy(col("lang"))
-        .agg(sum(col("sign")).as("dn"),
-          sum(col("sign") * length(col("text"))).as("dlen"))
-        .writeStream.format("memory").queryName(name)
-        .outputMode("complete").option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
-      val state2 = graft.operators.TxTable.snapshot(s, tdir, Some(2))
-        .groupBy(col("lang"))
-        .agg(count(lit(1)).as("n0"),
-          sum(length(col("text")).cast("long")).as("len0"))
-      state2.join(s.table(name), Seq("lang"), "full_outer")
-        .select(col("lang"),
-          (coalesce(col("n0"), lit(0L)) + coalesce(col("dn"), lit(0L)))
-            .as("n_docs"),
-          (coalesce(col("len0"), lit(0L)) + coalesce(col("dlen"), lit(0L)))
-            .as("sum_len"))
-        .filter(col("n_docs") > 0)
-        .orderBy("lang")
-    }
+  def q328StreamIvm(s: SparkSession, dir: String): DataFrame = {
+    val tdir = AnalyticsQueries.txTableDir(s, dir)
+    val deltas = s.readStream.format("txlog-cdf")
+      .option("fromVersion", "2")
+      .load(tdir)
+      .withColumn("sign",
+        when(col("_change_type") === "insert", 1L).otherwise(-1L))
+      .groupBy(col("lang"))
+      .agg(sum(col("sign")).as("dn"),
+        sum(col("sign") * length(col("text"))).as("dlen"))
+    val view = drainToTable(s, "q328_stream_ivm", "complete")(deltas)
+    val state2 = graft.operators.TxTable.snapshot(s, tdir, Some(2))
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n0"),
+        sum(length(col("text")).cast("long")).as("len0"))
+    state2.join(view, Seq("lang"), "full_outer")
+      .select(col("lang"),
+        (coalesce(col("n0"), lit(0L)) + coalesce(col("dn"), lit(0L)))
+          .as("n_docs"),
+        (coalesce(col("len0"), lit(0L)) + coalesce(col("dlen"), lit(0L)))
+          .as("sum_len"))
+      .filter(col("n_docs") > 0)
+      .orderBy("lang")
+  }
 
   /** Streaming twin of q327's unigram tokenizer APPLY — the
     * production ingest shape: train once, tokenize every arriving
@@ -1706,35 +1409,17 @@ object StreamingQueries {
     * not by comparing the engine to itself.
     */
   def q335StreamTokenize(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
+    withCheckpoint(s, "q335_stream_tokenize") { ckpt =>
       val pieces = AnalyticsQueries.unigramPieces(s, dir)
-      val ckpt = scratchCheckpoint("q335")
-      val out = java.nio.file.Files
-        .createTempDirectory("q335-tokens-").toString
-      val docs =
-        if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, "documents.parquet")))
-          s.readStream.schema(raw).parquet(dir + "/documents.parquet")
-        else
-          s.readStream.schema(raw)
-            .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val q = docs.writeStream
+      val out = scratchDir("q335-tokens")
+      drain(ckpt)(docsStream(s, dir).writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           graft.operators.Unigram
             .tokenize(batch.select(col("doc_id"), col("text")),
               "doc_id", "text", pieces)
             .join(batch.select(col("doc_id"), col("lang")), "doc_id")
             .write.mode("overwrite").parquet(s"$out/batch=$id")
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
+        })
       s.read.parquet(out)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"),
@@ -1756,42 +1441,18 @@ object StreamingQueries {
     * comparing the engine to itself.
     */
   def q345StreamBpe(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      val staticDocs =
-        if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, "documents.parquet")))
-          s.read.parquet(dir + "/documents.parquet")
-        else s.read.option("pathGlobFilter", "documents.parquet")
-          .parquet(dir)
+    withCheckpoint(s, "q345_stream_bpe") { ckpt =>
       val merges = graft.operators.Bpe
-        .train(staticDocs, "text", numMerges = 48)
+        .train(docsStatic(s, dir), "text", numMerges = 48)
         .map { case (l, r, _) => (l, r) }
-      val ckpt = scratchCheckpoint("q345")
-      val out = java.nio.file.Files
-        .createTempDirectory("q345-tokens-").toString
-      val docs =
-        if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, "documents.parquet")))
-          s.readStream.schema(raw).parquet(dir + "/documents.parquet")
-        else
-          s.readStream.schema(raw)
-            .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val q = docs.writeStream
+      val out = scratchDir("q345-tokens")
+      drain(ckpt)(docsStream(s, dir).writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           graft.operators.Bpe
             .tokenize(batch.select(col("doc_id"), col("text")),
               "doc_id", "text", merges)
             .write.mode("overwrite").parquet(s"$out/batch=$id")
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
+        })
       s.read.parquet(out)
         .select(col("doc_id"), col("n_tokens"), col("toks"))
         .orderBy("doc_id")
@@ -1808,32 +1469,15 @@ object StreamingQueries {
     * surviving set.
     */
   def q349StreamGdpr(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
-      val tdir = java.nio.file.Files
-        .createTempDirectory("graft-gdpr-").toString
-      val staticDocs =
-        (if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, "documents.parquet")))
-          s.read.parquet(dir + "/documents.parquet")
-        else s.read.option("pathGlobFilter", "documents.parquet")
-          .parquet(dir))
-          .select(col("doc_id"), col("text"), col("lang"))
+    withCheckpoint(s, "q349_stream_gdpr") { ckpt =>
+      val tdir = scratchDir("q349-table")
       graft.operators.TxTable.commitAppend(
-        staticDocs.repartitionByRange(4, col("doc_id")), tdir)
-      val ckpt = scratchCheckpoint("q349")
-      val requests =
-        (if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, "documents.parquet")))
-          s.readStream.schema(raw).parquet(dir + "/documents.parquet")
-        else s.readStream.schema(raw)
-          .option("pathGlobFilter", "documents.parquet").parquet(dir))
-          .filter(col("doc_id") % 9 === 0)
-          .select(col("doc_id"))
-      val q = requests.writeStream
+        docsStatic(s, dir).select(col("doc_id"), col("text"), col("lang"))
+          .repartitionByRange(4, col("doc_id")), tdir)
+      val requests = docsStream(s, dir)
+        .filter(col("doc_id") % 9 === 0)
+        .select(col("doc_id"))
+      drain(ckpt)(requests.writeStream
         .foreachBatch { (batch: DataFrame, _: Long) =>
           graft.operators.TxTable
             .commitDeleteDVKeys(s, tdir, batch, "doc_id")
@@ -1845,11 +1489,7 @@ object StreamingQueries {
             .commitDeleteDVKeys(s, tdir, batch, "doc_id")
           require(v2 == v, s"replayed erasure batch committed: v$v -> v$v2")
           ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
+        })
       val vPre = graft.operators.TxTable.currentVersion(tdir)
       graft.operators.TxTable.commitPurgeDVs(s, tdir)
       def roll(stage: String, v: Option[Int]): DataFrame =
@@ -1873,35 +1513,17 @@ object StreamingQueries {
     * independent DuckDB DP-replay oracle.
     */
   def q337StreamPerplexity(s: SparkSession, dir: String): DataFrame =
-    withShufflePartitions(s, 8) {
-      val raw = StructType(Seq(
-        StructField("doc_id", LongType), StructField("text", StringType),
-        StructField("lang", StringType), StructField("source", StringType),
-        StructField("n_chars", LongType)))
+    withCheckpoint(s, "q337_stream_perplexity") { ckpt =>
       val pieces = AnalyticsQueries.unigramPieces(s, dir)
-      val ckpt = scratchCheckpoint("q337")
-      val out = java.nio.file.Files
-        .createTempDirectory("q337-scores-").toString
-      val docs =
-        if (java.nio.file.Files.isDirectory(
-            java.nio.file.Paths.get(dir, "documents.parquet")))
-          s.readStream.schema(raw).parquet(dir + "/documents.parquet")
-        else
-          s.readStream.schema(raw)
-            .option("pathGlobFilter", "documents.parquet").parquet(dir)
-      val q = docs.writeStream
+      val out = scratchDir("q337-scores")
+      drain(ckpt)(docsStream(s, dir).writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           graft.operators.Unigram
             .scoreDocs(batch.select(col("doc_id"), col("text")),
               "doc_id", "text", pieces)
             .join(batch.select(col("doc_id"), col("lang")), "doc_id")
             .write.mode("overwrite").parquet(s"$out/batch=$id")
-          ()
-        }
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow()).start()
-      q.awaitTermination()
-      deleteRecursively(ckpt)
+        })
       s.read.parquet(out)
         .filter(col("n_tokens") > 0)
         .withColumn("mean_lp",

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import java.sql.DriverManager
+import java.sql.{Connection, DriverManager}
 
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{Column, DataFrame, Row}
@@ -162,6 +162,20 @@ object SqlSink extends Logging {
     qe.observedMetrics
   }
 
+  /** Binds each of `rows` (`n` bind columns) to `positionalSql` and runs
+    * them as one JDBC batch on `conn`, inside its open transaction.
+    */
+  private def executeBatch(conn: Connection, positionalSql: String, n: Int,
+      rows: Iterator[Row]): Unit = {
+    val st = conn.prepareStatement(positionalSql)
+    rows.foreach { r =>
+      var i = 0
+      while (i < n) { st.setObject(i + 1, r.get(i)); i += 1 }
+      st.addBatch()
+    }
+    st.executeBatch()
+  }
+
   /** One JDBC batch per partition (the executemany analog). */
   def writeJdbc(url: String, positionalSql: String, params: DataFrame): Map[String, Row] = {
     val n = params.columns.length
@@ -170,20 +184,18 @@ object SqlSink extends Logging {
         val conn = DriverManager.getConnection(url)
         try {
           conn.setAutoCommit(false)
-          val st = conn.prepareStatement(positionalSql)
-          rows.foreach { r =>
-            var i = 0
-            while (i < n) {
-              st.setObject(i + 1, r.get(i)); i += 1
-            }
-            st.addBatch()
-          }
-          st.executeBatch()
+          executeBatch(conn, positionalSql, n, rows)
           conn.commit()
         } finally conn.close()
       }
     }
   }
+
+  /** The idempotent sink's partition count. A marker names a partition
+    * by its index, so a replay finds its markers only if every run
+    * hashes the same rows into the same partitions: the count is fixed.
+    */
+  private val SinkPartitions = 16
 
   /** Marker table for idempotent replay detection. */
   val MarkerTable = "graft_committed"
@@ -218,8 +230,8 @@ object SqlSink extends Logging {
     * differently than the pre-crash run (file-source splits and
     * shuffle confs are not restart-stable), under which a surviving
     * marker would silently drop a *different* row subset — so the
-    * batch is hash-repartitioned on every bind column into a fixed
-    * `sinkPartitions` count, making pid a pure function of row values.
+    * batch is hash-repartitioned on every bind column into the fixed
+    * [[SinkPartitions]] count, making pid a pure function of row values.
     *
     * Error contract (deliberately different from the R14 sink above):
     * a failed batch RETHROWS, failing the micro-batch so the checkpoint
@@ -228,13 +240,12 @@ object SqlSink extends Logging {
     * dead-lettered upstream (Flows' corrupt-JSON split), not here.
     */
   def idempotentForeachBatch(url: String, query: String, mapping: Mapping,
-      flowId: String, jsonCol: Option[String] = None,
-      sinkPartitions: Int = 16): (DataFrame, Long) => Map[String, Row] = {
+      flowId: String, jsonCol: Option[String] = None): (DataFrame, Long) => Map[String, Row] = {
     val (positional, paramOrder) = compile(query)
     ensureMarkerTable(url)
     (batch: DataFrame, batchId: Long) => {
       val mapped = mapParameters(batch, mapping, paramOrder, jsonCol)
-      val params = mapped.repartition(sinkPartitions, mapped.columns.map(col): _*)
+      val params = mapped.repartition(SinkPartitions, mapped.columns.map(col): _*)
       val n = params.columns.length
       try {
         // one SQL execution, whose observed metrics (Flows' one-pass
@@ -266,13 +277,7 @@ object SqlSink extends Logging {
                   }
                 if (committed) {
                   try {
-                    val st = conn.prepareStatement(positional)
-                    rows.foreach { r =>
-                      var i = 0
-                      while (i < n) { st.setObject(i + 1, r.get(i)); i += 1 }
-                      st.addBatch()
-                    }
-                    st.executeBatch()
+                    executeBatch(conn, positional, n, rows)
                     conn.commit() // rows + marker atomically
                   } catch {
                     // roll back the open txn (marker + partial rows)

@@ -39,4 +39,35 @@ class StreamingEquivalenceSpec extends SparkSpec {
     assert(stream.length == batch.length)
     assert(stream.map(_.toString).toSeq == batch.map(_.toString).toSeq)
   }
+
+  test("a drain whose batch throws rethrows, deletes its checkpoint and restores the shuffle partitions") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.sql.DataFrame
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    assert(before != "8", "the session count must differ from the drain's")
+    val tag = s"failing-drain-${System.nanoTime()}"
+    def leftovers(): List[String] =
+      java.nio.file.Files.list(StreamingQueries.scratchBase).iterator().asScala
+        .map(_.getFileName.toString).filter(_.startsWith(s"graft-$tag-")).toList
+    val events = spark.readStream
+      .schema(spark.read.parquet(s"$sf/events.parquet").schema)
+      .option("pathGlobFilter", "events.parquet").parquet(sf)
+    val inBatch = new java.util.concurrent.atomic.AtomicReference[String]()
+    val err = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      StreamingQueries.withCheckpoint(spark, tag) { ckpt =>
+        assert(leftovers() == List(java.nio.file.Paths.get(ckpt).getFileName.toString))
+        StreamingQueries.drain(ckpt)(events.writeStream
+          .foreachBatch { (b: DataFrame, _: Long) =>
+            inBatch.set(b.sparkSession.conf.get(key))
+            throw new IllegalStateException("injected batch failure")
+          })
+      }
+    }
+    val causes = Iterator.iterate(err: Throwable)(_.getCause).takeWhile(_ != null)
+    assert(causes.exists(e => Option(e.getMessage).exists(_.contains("injected batch failure"))))
+    assert(inBatch.get == "8")
+    assert(leftovers().isEmpty)
+    assert(spark.conf.get(key) == before)
+  }
 }
