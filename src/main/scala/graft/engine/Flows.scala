@@ -127,8 +127,8 @@ object Flows extends org.apache.spark.internal.Logging {
             when(isCorrupt, struct(stream.columns.map(col): _*))).as("corrupt_rows"))
         // the sink reads its parameters off the parsed struct
         val sinkJson = jsonCol.map(_ => Parsed)
-        // idempotent: true => batchId-keyed replay protection (exactly-
-        // once with the checkpointed replayable source)
+        // idempotent: true => (batch, slice)-keyed replay protection
+        // (exactly-once with the checkpointed replayable source)
         val sink: (DataFrame, Long) => Option[Map[String, Row]] =
           if (kout.get("idempotent").exists(_.toString.toBoolean)) {
             val write = SqlSink.idempotentForeachBatch(url, query, mapping,

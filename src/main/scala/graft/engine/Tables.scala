@@ -11,10 +11,6 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * single-file layout.
   */
 object Tables {
-  val all: Seq[String] = Seq(
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings")
-
   def apply(spark: SparkSession, dir: String, name: String): DataFrame = {
     val df = spark.read.parquet(s"$dir/$name.parquet")
     // events.ts is TIMESTAMP(NANOS) parquet, which Spark reads as a long
@@ -29,8 +25,4 @@ object Tables {
       case _ => df
     }
   }
-
-  /** Register every table as a temp view (for spark.sql-form queries). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    all.foreach(n => apply(spark, dir, n).createOrReplaceTempView(n))
 }

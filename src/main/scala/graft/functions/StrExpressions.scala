@@ -75,29 +75,16 @@ object StrKernels {
   }
 }
 
-abstract class StrSimBinary extends BinaryExpression {
+case class JaroWinklerSim(left: Expression, right: Expression)
+    extends BinaryExpression {
   override def dataType: DataType = DoubleType
-  protected def kernel: String
 
-  override def nullSafeEval(a: Any, b: Any): Any = kernel match {
-    case "jaro"        => StrKernels.jaro(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-    case "jaroWinkler" => StrKernels.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
-  }
+  override def nullSafeEval(a: Any, b: Any): Any =
+    StrKernels.jaroWinkler(a.asInstanceOf[UTF8String], b.asInstanceOf[UTF8String])
 
   override def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.StrKernels.$kernel($a, $b)")
-}
+    defineCodeGen(ctx, ev, (a, b) => s"graft.functions.StrKernels.jaroWinkler($a, $b)")
 
-case class JaroSim(left: Expression, right: Expression) extends StrSimBinary {
-  override protected def kernel: String = "jaro"
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) =
-    copy(left = l, right = r)
-}
-
-case class JaroWinklerSim(left: Expression, right: Expression)
-    extends StrSimBinary {
-  override protected def kernel: String = "jaroWinkler"
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
 }
@@ -105,9 +92,6 @@ case class JaroWinklerSim(left: Expression, right: Expression)
 /** Column-level entry points (the [[VectorFunctions]] pattern). */
 object StrFunctions {
   import org.apache.spark.sql.GraftBridge.{column, expression}
-
-  def jaroSim(a: Column, b: Column): Column =
-    column(JaroSim(expression(a), expression(b)))
 
   def jaroWinklerSim(a: Column, b: Column): Column =
     column(JaroWinklerSim(expression(a), expression(b)))

@@ -1,15 +1,21 @@
 package graft.sinks
 
 import java.sql.{Connection, DriverManager}
+import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.spark.OneToOneDependency
 import org.apache.spark.internal.Logging
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
+import org.apache.spark.sql.execution.datasources.v2.{DataSourceRDD, DataSourceRDDPartition}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 import graft.functions.{JsonPaths, PathExtract}
+import graft.sources.{MqInlinePartition, MqRemotePartition}
 
 /** Batched SQL sink — the Spark re-expression of the reference's
   * `Database` output block (reference sql.py:41-107):
@@ -26,9 +32,12 @@ import graft.functions.{JsonPaths, PathExtract}
   *     batch (Flows writes it to its dead-letter dir).
   *
   * Scale notes: rows never touch the driver; each executor partition
-  * opens its own connection (connection count == partitions, so size
-  * the write `coalesce` to the database's capacity, not the shuffle
-  * width).
+  * opens its own connection, so connections == partitions. A graftmq
+  * batch's partitions are its source slices, by default one per task
+  * slot (`MqSource`'s `rowsPerPartition`), and both sinks write them
+  * where they are read; the idempotent sink's hash path (inputs that are
+  * not graftmq slices) opens 16. Size the slots or the width to the
+  * database's capacity.
   */
 object SqlSink extends Logging {
 
@@ -191,14 +200,19 @@ object SqlSink extends Logging {
     }
   }
 
-  /** The idempotent sink's partition count. A marker names a partition
-    * by its index, so a replay finds its markers only if every run
-    * hashes the same rows into the same partitions: the count is fixed.
+  /** The hash path's bucket count. A marker names a bucket by its
+    * index, so a replay finds its markers only if every run hashes the
+    * same rows into the same buckets: the count is fixed.
     */
   private val SinkPartitions = 16
 
   /** Marker table for idempotent replay detection. */
   val MarkerTable = "graft_committed"
+
+  /** The marker `part_id` of graftmq slice `i`: negative, so that no
+    * slice marker shares a key with a hash bucket's (0 until 16).
+    */
+  private def sliceMarker(i: Int): Int = -1 - i
 
   /** Creates the marker table if absent. The composite PRIMARY KEY is
     * load-bearing: two task attempts for the same (flow, batch,
@@ -216,22 +230,72 @@ object SqlSink extends Logging {
     finally conn.close()
   }
 
-  /** Idempotent variant: rows + a (flow, batch, partition) marker commit
-    * in ONE transaction per partition; a replayed micro-batch (Spark
-    * restart re-runs the last uncommitted batch — at-least-once) finds
-    * its marker and skips. Checkpoint + replayable source + this sink =
-    * effectively exactly-once end-to-end (SURVEY §7.4 upgrade path).
-    * Returns the metrics observed on the batch.
+  /** Whether `df`'s partition `i` is exactly slice `i` of one graftmq
+    * batch: its RDD reaches a graftmq scan through one-to-one
+    * dependencies only, so no exchange, coalesce or union sits above
+    * the scan. The plan is checked first: an adaptive plan would run
+    * its shuffle stages to build the RDD.
+    */
+  private def partitionsAreSlices(df: DataFrame): Boolean = {
+    def reachesSlices(rdd: RDD[_]): Boolean = rdd match {
+      case scan: DataSourceRDD => scan.partitions.forall {
+        case p: DataSourceRDDPartition => p.inputPartitions match {
+          case Seq(_: MqInlinePartition | _: MqRemotePartition) => true
+          case _ => false
+        }
+        case _ => false
+      }
+      case _ => rdd.dependencies match {
+        case Seq(d: OneToOneDependency[_]) => reachesSlices(d.rdd)
+        case _ => false
+      }
+    }
+    val qe = df.queryExecution
+    !qe.executedPlan.isInstanceOf[AdaptiveSparkPlanExec] && reachesSlices(qe.toRdd)
+  }
+
+  /** Whether `batchId` of `flowId` has a hash-bucket marker. */
+  private def hashMarked(url: String, flowId: String, batchId: Long): Boolean = {
+    val conn = DriverManager.getConnection(url)
+    try {
+      val st = conn.prepareStatement(s"SELECT COUNT(*) FROM $MarkerTable " +
+        "WHERE flow_id = ? AND batch_id = ? AND part_id >= 0")
+      st.setString(1, flowId); st.setLong(2, batchId)
+      val rs = st.executeQuery(); rs.next()
+      rs.getInt(1) > 0
+    } finally conn.close()
+  }
+
+  /** Idempotent variant: each partition's rows and its (flow, batch,
+    * partition) marker commit in ONE transaction; a replayed
+    * micro-batch (Spark restart re-runs the last uncommitted batch —
+    * at-least-once) finds its markers and skips them. Checkpoint +
+    * replayable source + this sink = effectively exactly-once
+    * end-to-end (SURVEY §7.4 upgrade path). Returns the metrics
+    * observed on the batch.
     *
-    * Two replay hazards are closed here: (a) concurrent task attempts
-    * for one partition — the marker INSERT goes first inside the
-    * transaction, so the marker-table PRIMARY KEY makes the second
-    * committer fail and roll back; (b) a replayed batch partitioned
-    * differently than the pre-crash run (file-source splits and
-    * shuffle confs are not restart-stable), under which a surviving
-    * marker would silently drop a *different* row subset — so the
-    * batch is hash-repartitioned on every bind column into the fixed
-    * [[SinkPartitions]] count, making pid a pure function of row values.
+    * A marker names a partition only if a replay cuts the batch into
+    * the same partitions, holding the same rows. Two keys do that:
+    *   - graftmq slice (`part_id` -1, -2, …): a batch whose partitions
+    *     are its graftmq input slices (the plan reads one graftmq scan
+    *     and moves no row between partitions) is written in the tasks
+    *     that read it, one job, one connection per slice. The source
+    *     plans slices from the checkpointed offsets alone
+    *     ([[graft.sources.MqOffset]]), so (batch, slice) names the same
+    *     messages in every run.
+    *   - hash bucket (`part_id` 0–15): any other batch — file inputs,
+    *     whose splits are not restart-stable, static or repartitioned
+    *     frames — is hash-repartitioned on every bind column into
+    *     [[SinkPartitions]] buckets, so a bucket is a pure function of
+    *     row values. That costs a shuffle: a second job.
+    * A sink's first batch may replay a batch an earlier run wrote by
+    * hash bucket (before graftmq batches were keyed by slice); if it
+    * finds such markers, that batch takes the hash path again.
+    *
+    * Concurrent task attempts for one partition are closed too: the
+    * marker INSERT goes first inside the transaction, so the
+    * marker-table PRIMARY KEY makes the second committer fail and roll
+    * back.
     *
     * Error contract (deliberately different from the R14 sink above):
     * a failed batch RETHROWS, failing the micro-batch so the checkpoint
@@ -243,16 +307,22 @@ object SqlSink extends Logging {
       flowId: String, jsonCol: Option[String] = None): (DataFrame, Long) => Map[String, Row] = {
     val (positional, paramOrder) = compile(query)
     ensureMarkerTable(url)
+    val firstBatch = new AtomicBoolean(true)
     (batch: DataFrame, batchId: Long) => {
       val mapped = mapParameters(batch, mapping, paramOrder, jsonCol)
-      val params = mapped.repartition(SinkPartitions, mapped.columns.map(col): _*)
+      val bySlice = !(firstBatch.getAndSet(false) && hashMarked(url, flowId, batchId)) &&
+        partitionsAreSlices(mapped)
+      val params =
+        if (bySlice) mapped
+        else mapped.repartition(SinkPartitions, mapped.columns.map(col): _*)
       val n = params.columns.length
       try {
         // one SQL execution, whose observed metrics (Flows' one-pass
-        // corrupt/content-type counts) are returned. The partition id is
-        // the deterministic hash-partition index, read off the task context.
+        // corrupt/content-type counts) are returned. The partition id,
+        // read off the task context, is the slice or the bucket index
         foreachPartition(params) { rows =>
-          val pid = org.apache.spark.TaskContext.getPartitionId()
+          val i = org.apache.spark.TaskContext.getPartitionId()
+          val pid = if (bySlice) sliceMarker(i) else i
           if (rows.nonEmpty) {
             val conn = DriverManager.getConnection(url)
             try {

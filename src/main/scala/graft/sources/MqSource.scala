@@ -1,12 +1,17 @@
 package graft.sources
 
+import java.io.{InputStream, OutputStream}
+import java.nio.charset.StandardCharsets.UTF_8
 import java.util
 
+import org.apache.spark.SparkContext
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.execution.streaming.checkpointing.HDFSMetadataLog
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -27,13 +32,22 @@ import org.apache.spark.unsafe.types.UTF8String
   *     reference batcher's size-OR-time contract (batcher.py:54-109,
   *     SURVEY §7.4): a micro-batch closes at the time limit or earlier
   *     when the size cap fills it
-  *   - `rowsPerPartition` (default 5000): each admitted offset range is
-  *     split into ceil(rows / rowsPerPartition) input partitions, so a
-  *     large backlog fans out across executor cores instead of hitting
-  *     one task
+  *   - `rowsPerPartition`: the width of the slices each admitted offset
+  *     range is cut into, one input partition (one task) per slice. It
+  *     must not change while a batch is in flight: the replay would cut
+  *     that batch anew. Unset, the width is ceil(rows / defaultParallelism),
+  *     but at least [[MqMicroBatchStream.MinWidth]]: a batch runs as one
+  *     wave of tasks, at most one per task slot, and a batch of up to 5000
+  *     rows stays one slice (one sink transaction)
   *
   * Offsets are log positions; `commit(end)` acks (truncates) the broker
   * log — at-least-once end-to-end, exactly-once with an idempotent sink.
+  * A slot-derived width is written to the source's checkpoint dir
+  * ([[SliceWidthLog]]) before Spark's offset log records its range, so a
+  * replayed batch is cut into the same slices whatever the slot count
+  * after the restart: (batch, slice index) names the same messages in
+  * every run, the key [[graft.sinks.SqlSink.idempotentForeachBatch]]
+  * marks graftmq batches by.
   */
 class MqDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graftmq"
@@ -73,17 +87,47 @@ class MqScan(options: CaseInsensitiveStringMap) extends Scan {
       options.get("exchange"),
       Option(options.get("maxMessagesPerTrigger")).map(_.toLong),
       Option(options.get("broker")),
-      Option(options.get("rowsPerPartition")).map(_.toInt).getOrElse(5000))
+      Option(options.get("rowsPerPartition")).map(_.toLong),
+      Some(checkpointLocation))
 }
 
 case class MqOffset(pos: Long) extends Offset {
   override def json(): String = pos.toString
 }
 
+/** The slot-derived slice width of admitted ranges, keyed by the range's
+  * end position (HDFSMetadataLog's batch id), one file each under `path`.
+  * Plain text: the width.
+  */
+private[sources] class SliceWidthLog(spark: SparkSession, path: String)
+    extends HDFSMetadataLog[java.lang.Long](spark, path) {
+  override def serialize(width: java.lang.Long, out: OutputStream): Unit =
+    out.write(width.toString.getBytes(UTF_8))
+  override def deserialize(in: InputStream): java.lang.Long =
+    java.lang.Long.valueOf(new String(in.readAllBytes(), UTF_8).trim)
+}
+
+/** `rowsPerPartition`: the fixed slice width, if set. `checkpoint`: the
+  * source's checkpoint dir, where [[SliceWidthLog]] keeps the widths
+  * (without one, every range is cut at `rowsPerPartition` or
+  * [[MqMicroBatchStream.MinWidth]]). `slots`: the task slots an unset
+  * width spreads a batch over.
+  */
 class MqMicroBatchStream(exchangeName: String, maxPerTrigger: Option[Long],
-    brokerUrl: Option[String], rowsPerPartition: Int)
+    brokerUrl: Option[String], rowsPerPartition: Option[Long],
+    checkpoint: Option[String] = None,
+    slots: () => Int = () => SparkContext.getOrCreate().defaultParallelism)
     extends MicroBatchStream with SupportsAdmissionControl
     with SupportsTriggerAvailableNow {
+  /** A stream that cuts every range at a fixed width. */
+  def this(exchangeName: String, maxPerTrigger: Option[Long],
+      brokerUrl: Option[String], rowsPerPartition: Int) =
+    this(exchangeName, maxPerTrigger, brokerUrl, Some(rowsPerPartition.toLong))
+
+  private val widths =
+    checkpoint.map(c => new SliceWidthLog(SparkSession.active, s"$c/slice-widths"))
+  @volatile private var recorded = false
+
   // def, not val: the in-JVM transport must re-resolve the exchange so
   // a broker reset between stream construction and use (tests simulate
   // restarts this way) is observed rather than served from a stale ref
@@ -128,6 +172,19 @@ class MqMicroBatchStream(exchangeName: String, maxPerTrigger: Option[Long],
       case mr: ReadMaxRows => math.min(avail, from + mr.maxRows)
       case _               => avail
     }
+    // only a slot-derived width above the floor is recorded: planning
+    // falls back to the floor (or the fixed `rowsPerPartition`) itself,
+    // so a batch of up to slots × MinWidth rows costs no write
+    if (rowsPerPartition.isEmpty && end > from) {
+      val n = math.max(1, slots()).toLong
+      val width = (end - from + n - 1) / n
+      if (width > MqMicroBatchStream.MinWidth) widths.foreach { w =>
+        // a no-op if an attempt that died before Spark's offset log
+        // recorded its range left a width for this end: that one stands
+        w.add(end, width)
+        recorded = true
+      }
+    }
     MqOffset(math.max(from, end))
   }
 
@@ -137,17 +194,22 @@ class MqMicroBatchStream(exchangeName: String, maxPerTrigger: Option[Long],
 
   override def reportLatestOffset(): Offset = MqOffset(log.latest)
 
-  /** The admitted range is chunked into `rowsPerPartition`-sized input
-    * partitions. With a `broker` server the partitions carry only
-    * (url, exchange, lo, hi) and each EXECUTOR fetches its own slice
-    * over TCP — rows never pass through the driver. The in-JVM
-    * transport inlines the rows (driver == executor JVM in local mode).
+  /** The admitted range is cut into slices of the width recorded for
+    * it, one input partition each: a pure function of the checkpoint.
+    * A range with no recorded width (one at the floor, a fixed
+    * `rowsPerPartition`, or one checkpointed before widths were
+    * recorded) is cut at `rowsPerPartition` or 5000. With a `broker`
+    * server the partitions carry only (url, exchange, lo, hi) and each
+    * EXECUTOR fetches its own slice over TCP — rows never pass through
+    * the driver. The in-JVM transport inlines the rows (driver ==
+    * executor JVM in local mode).
     */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[MqOffset].pos
     val until = end.asInstanceOf[MqOffset].pos
     log.alignBase(from)
-    val rpp = rowsPerPartition.toLong
+    val rpp = widths.flatMap(_.get(until)).map(_.longValue)
+      .getOrElse(rowsPerPartition.getOrElse(MqMicroBatchStream.MinWidth))
     val n = math.max(1L, (until - from + rpp - 1) / rpp).toInt
     val bounds = (0 until n).map(i =>
       (from + i * rpp, math.min(until, from + (i + 1) * rpp)))
@@ -179,10 +241,21 @@ class MqMicroBatchStream(exchangeName: String, maxPerTrigger: Option[Long],
     * so acknowledgement lags one batch — messages stay replayable until
     * then, which only strengthens the at-least-once guarantee.
     */
-  override def commit(end: Offset): Unit =
-    log.ack(end.asInstanceOf[MqOffset].pos)
+  override def commit(end: Offset): Unit = {
+    val pos = end.asInstanceOf[MqOffset].pos
+    log.ack(pos)
+    // ranges ending before `end` never replay
+    if (recorded) widths.foreach(_.purge(pos))
+  }
 
   override def stop(): Unit = ()
+}
+
+object MqMicroBatchStream {
+  /** The smallest slot-derived slice width, and the fixed width of old
+    * checkpoints' ranges.
+    */
+  val MinWidth = 5000L
 }
 
 case class MqInlinePartition(exchange: String, msgs: Array[BrokerMessage])

@@ -1,6 +1,8 @@
 package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SQLContext}
+import org.apache.spark.sql.connector.read.streaming
+import org.apache.spark.sql.connector.read.streaming.{ReadLimit, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.execution.streaming.{Offset, Source}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources.{DataSourceRegister, StreamSourceProvider}
@@ -28,6 +30,10 @@ import graft.operators.TxTable
   *
   * Options: `path` (table root), `fromVersion` (exclusive lower bound,
   * default 0 = the full history since table creation).
+  *
+  * `Trigger.AvailableNow` pins the table's current version when the
+  * query starts (both sources here): the drain stops there, and the
+  * append source still caps each batch at `maxVersionsPerTrigger`.
   */
 class TxLogCdfSourceProvider extends StreamSourceProvider
     with DataSourceRegister {
@@ -97,15 +103,17 @@ case class TxVersionOffset(version: Int) extends Offset {
 class TxLogAppendSource(sqlContext: SQLContext, dir: String,
     startingVersion: Option[Int], maxVersionsPerTrigger: Option[Int],
     ignoreDeletes: Boolean, ignoreChanges: Boolean,
-    declaredSchema: StructType) extends Source
-    with org.apache.spark.sql.connector.read.streaming
-      .SupportsAdmissionControl {
+    declaredSchema: StructType) extends Source with SupportsTriggerAvailableNow {
 
   override def schema: StructType = declaredSchema
 
   // last end-version handed to getBatch (admission-control base);
   // -1 = no batch planned yet this run
   @volatile private var lastEnd: Int = -1
+  @volatile private var availableNow: Option[Int] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNow = Some(TxTable.currentVersion(dir))
 
   /** Admission base: everything this run has learned — the restored
     * offset Spark passes (committed, survives restarts), the last end
@@ -117,7 +125,7 @@ class TxLogAppendSource(sqlContext: SQLContext, dir: String,
     * sources take.
     */
   private def plannedEnd(committedBase: Int): Option[TxVersionOffset] = {
-    val cur = TxTable.currentVersion(dir)
+    val cur = availableNow.getOrElse(TxTable.currentVersion(dir))
     val floor = startingVersion.getOrElse(0)
     val known = math.max(math.max(lastEnd, committedBase),
       startingVersion.getOrElse(-1))
@@ -134,15 +142,9 @@ class TxLogAppendSource(sqlContext: SQLContext, dir: String,
     }
   }
 
-  override def getDefaultReadLimit
-      : org.apache.spark.sql.connector.read.streaming.ReadLimit =
-    org.apache.spark.sql.connector.read.streaming.ReadLimit
-      .allAvailable()
+  override def getDefaultReadLimit: ReadLimit = ReadLimit.allAvailable()
 
-  override def latestOffset(
-      start: org.apache.spark.sql.connector.read.streaming.Offset,
-      limit: org.apache.spark.sql.connector.read.streaming.ReadLimit)
-      : org.apache.spark.sql.connector.read.streaming.Offset = {
+  override def latestOffset(start: streaming.Offset, limit: ReadLimit): streaming.Offset = {
     val committed =
       Option(start).map(_.json().trim.toInt).getOrElse(-1)
     plannedEnd(committed).orNull
@@ -199,14 +201,24 @@ class TxLogAppendSource(sqlContext: SQLContext, dir: String,
 }
 
 class TxLogCdfSource(sqlContext: SQLContext, dir: String,
-    fromVersion: Int, declaredSchema: StructType) extends Source {
+    fromVersion: Int, declaredSchema: StructType)
+    extends Source with SupportsTriggerAvailableNow {
 
   override def schema: StructType = declaredSchema
 
+  @volatile private var availableNow: Option[Int] = None
+
+  override def prepareForTriggerAvailableNow(): Unit =
+    availableNow = Some(TxTable.currentVersion(dir))
+
   override def getOffset: Option[Offset] = {
-    val v = TxTable.currentVersion(dir)
+    val v = availableNow.getOrElse(TxTable.currentVersion(dir))
     if (v <= fromVersion) None else Some(TxVersionOffset(v))
   }
+
+  // every batch takes all committed versions (the `Source` contract)
+  override def latestOffset(start: streaming.Offset, limit: ReadLimit): streaming.Offset =
+    getOffset.orNull
 
   private def versionOf(o: Offset): Int = o match {
     case TxVersionOffset(v) => v

@@ -3,8 +3,10 @@ package graft.engine
 import java.sql.DriverManager
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, GetJsonObject}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.execution.{SparkPlan, SQLExecution}
 import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 
 import graft.SparkSpec
 import graft.functions.ParseJsonPaths
@@ -295,6 +297,92 @@ class FlowsSpec extends SparkSpec {
     } finally {
       q.stop()
       spark.listenerManager.unregister(listener)
+    }
+  }
+
+  test("an idempotent graftmq flow writes each slice where it is read: no shuffle, one job a batch") {
+    val url = "jdbc:derby:memory:slicedb;create=true"
+    val c = DriverManager.getConnection(url)
+    c.createStatement().execute("CREATE TABLE slicelogs (v VARCHAR(100))")
+    c.close()
+    val sinkPlans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val qeListener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          durationNs: Long): Unit =
+        if (funcName == "foreachPartition") sinkPlans.add(qe.executedPlan)
+      override def onFailure(funcName: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          exception: Exception): Unit = ()
+    }
+    // Spark jobs by (streaming query, SQL execution that started them)
+    val jobs = new java.util.concurrent.ConcurrentHashMap[(String, String), Integer]()
+    val jobListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        for (p <- Option(e.properties); query <- Option(p.getProperty("sql.streaming.queryId"));
+             exec <- Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          jobs.merge((query, exec), 1, (a, b) => a + b)
+    }
+    (1 to 10).foreach(i => MemoryBroker.publish("slice_ex", s"""{"v":"s$i"}"""))
+    val cfg = Config.parseString(
+      s"""size_limit: 4
+         |time_limit: 1
+         |blocks:
+         |  - name: in
+         |    type: amqp
+         |    kwargs: {}
+         |  - name: out
+         |    type: sql
+         |    kwargs:
+         |      url: '$url'
+         |flows:
+         |  - - name: in
+         |      kwargs:
+         |        exchange: slice_ex
+         |    - name: out
+         |      kwargs:
+         |        query: "INSERT INTO slicelogs (v) VALUES (:v)"
+         |        idempotent: true
+         |        parameters:
+         |          v: v
+         |""".stripMargin)
+    val ckpt = java.nio.file.Files.createTempDirectory("slice-ckpt").toString
+    spark.listenerManager.register(qeListener)
+    spark.sparkContext.addSparkListener(jobListener)
+    val q = Flows.startFlow(spark, cfg, cfg.flows.head, ckpt, "slice_flow")
+    def query(sql: String): Seq[Int] = {
+      val cc = DriverManager.getConnection(url)
+      try {
+        val rs = cc.createStatement().executeQuery(sql)
+        Iterator.continually(rs).takeWhile(_.next()).map(_.getInt(1)).toVector
+      } finally cc.close()
+    }
+    try {
+      val deadline = System.currentTimeMillis() + 60000
+      def count() = query("SELECT COUNT(*) FROM slicelogs").head
+      while (count() < 10 && System.currentTimeMillis() < deadline)
+        Thread.sleep(200)
+      assert(count() == 10)
+      q.processAllAvailable()
+      org.apache.spark.SpecBridge.drainListeners(spark.sparkContext)
+      assert(!sinkPlans.isEmpty)
+      sinkPlans.forEach { plan =>
+        assert(planNodes.collect(plan) { case e: ShuffleExchangeExec => e }.isEmpty, plan)
+      }
+      // the flow ran one SQL execution with jobs a batch, and one job in it
+      import scala.jdk.CollectionConverters._
+      val perExecution = jobs.asScala.collect { case ((id, _), n) if id == q.id.toString => n.toInt }
+      val batches = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).distinct
+      assert(perExecution.size == batches.length && perExecution.forall(_ == 1),
+        s"jobs per execution: $perExecution over ${batches.length} batches")
+      // a batch of at most 4 rows is one slice: its marker is slice 0's
+      val parts = query(
+        s"SELECT part_id FROM ${graft.sinks.SqlSink.MarkerTable} WHERE flow_id = 'slice_flow'")
+      assert(parts.size == batches.length && parts.forall(_ == -1), parts)
+    } finally {
+      q.stop()
+      spark.listenerManager.unregister(qeListener)
+      spark.sparkContext.removeSparkListener(jobListener)
     }
   }
 

@@ -296,8 +296,7 @@ class TxLogSourceSpec extends SparkSpec {
     val batches = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Long]())
     // default trigger + processAllAvailable: the V1 source's
-    // admission control caps each planned batch (AvailableNow falls
-    // back to single-batch execution on V1 sources)
+    // admission control caps each planned batch
     val q6 = spark.readStream.format("txlog")
       .option("startingVersion", "0")
       .option("maxVersionsPerTrigger", "2").load(d4)
@@ -373,6 +372,47 @@ class TxLogSourceSpec extends SparkSpec {
     assert(sizesB.sum == 8L && sizesB.forall(_ <= 2L),
       s"restart with startingVersion mishandled: $sizesB")
     ()
+  }
+
+  test("AvailableNow drains up to the version pinned at start, in capped batches") {
+    import org.apache.spark.sql.streaming.Trigger
+    import scala.jdk.CollectionConverters._
+    // without SupportsTriggerAvailableNow Spark ran ONE all-available
+    // batch (ignoring maxVersionsPerTrigger) and logged a fallback warning
+    def drain(format: String, d: String, ckpt: String, opts: Map[String, String])
+        : Seq[Seq[Long]] = {
+      val batches = java.util.Collections.synchronizedList(
+        new java.util.ArrayList[Seq[Long]]())
+      val q = opts.foldLeft(spark.readStream.format(format)) {
+        case (r, (k, v)) => r.option(k, v)
+      }.load(d).writeStream
+        .foreachBatch { (df: org.apache.spark.sql.DataFrame, id: Long) =>
+          batches.add(df.select("id").as[Long].collect().toSeq.sorted)
+          // a commit made during the drain is left for the next one
+          if (id == 0) TxTable.commitAppend(Seq((99L, "late")).toDF("id", "s"), d)
+          ()
+        }
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      batches.asScala.toSeq
+    }
+    def tmp(p: String) = java.nio.file.Files.createTempDirectory(p).toString
+    def table(): String = {
+      val d = tmp("txlog-an-")
+      (1L to 6L).foreach(i => TxTable.commitAppend(Seq((i, s"v$i")).toDF("id", "s"), d))
+      d
+    }
+    val d = table()
+    val ckpt = tmp("txlog-an-ckpt-")
+    val opts = Map("startingVersion" -> "0", "maxVersionsPerTrigger" -> "2")
+    assert(drain("txlog", d, ckpt, opts) ==
+      Seq(Seq(1L, 2L), Seq(3L, 4L), Seq(5L, 6L)))
+    assert(drain("txlog", d, ckpt, opts) == Seq(Seq(99L)))
+    // the change feed: one batch up to the pinned version
+    val dc = table()
+    val cdf = drain("txlog-cdf", dc, tmp("txlog-an-cdf-ckpt-"), Map.empty)
+    assert(cdf == Seq((1L to 6L).toSeq), cdf)
   }
 
   test("ANSI constraint DDL: ADD/DROP CONSTRAINT, IF EXISTS, #constraints view") {
