@@ -268,12 +268,13 @@ class MqPartitionReader(exchange: String, msgs: Array[BrokerMessage])
     extends PartitionReader[InternalRow] {
   private var i = -1
   private val nowUs = System.currentTimeMillis() * 1000L
+  private val exchangeUtf8 = UTF8String.fromString(exchange)
   override def next(): Boolean = { i += 1; i < msgs.length }
   override def get(): InternalRow = {
     val m = msgs(i)
     InternalRow(
       UTF8String.fromString(m.body),
-      UTF8String.fromString(exchange),
+      exchangeUtf8,
       UTF8String.fromString(m.contentType),
       m.offset,
       nowUs)

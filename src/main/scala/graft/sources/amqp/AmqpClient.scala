@@ -218,8 +218,17 @@ final class AmqpConnection(url: AmqpUrl) {
   }
 
   private def sendFrames(frames: Frame*): Unit = out.synchronized {
-    frames.foreach(writeFrame(out, _))
-    out.flush()
+    try {
+      frames.foreach(writeFrame(out, _))
+      out.flush()
+    } catch {
+      // a failed write may leave a torn frame on the wire: the
+      // connection is unusable, even before the reader notices
+      case e: java.io.IOException =>
+        deadFlag = true
+        try sock.close() catch { case _: Exception => () }
+        throw e
+    }
   }
 
   // ---- reader thread: deliveries + RPC replies ----------------------
@@ -294,6 +303,10 @@ final class AmqpConnection(url: AmqpUrl) {
       case _: Throwable =>
         deadFlag = true
         try sock.close() catch { case _: Exception => () }
+        // no reply will come: fail an rpc() waiting on one now, not at
+        // its 15 s timeout
+        replies.put(
+          ConnectionClose(320, "CONNECTION_FORCED - connection is dead", 0, 0))
         onDead()
     }
   }, s"graft-amqp-reader-$host-$port")
@@ -377,9 +390,13 @@ final class AmqpConnection(url: AmqpUrl) {
       durable = durable, autoDelete = autoDelete, internal = internal,
       noWait = false, arguments)): Unit
 
-  def declareQueue(queue: String): Unit =
+  /** Declares a durable queue; returns its ready-message count from
+    * queue.declare-ok.
+    */
+  def declareQueue(queue: String): Int =
     rpc[QueueDeclareOk](QueueDeclare(queue, passive = false, durable = true,
-      exclusive = false, autoDelete = false, noWait = false, Map.empty)): Unit
+      exclusive = false, autoDelete = false, noWait = false, Map.empty))
+      .messageCount
 
   /** Passive declare: the un-acked backlog (message count) of a queue —
     * the one queue-introspection AMQP offers.
@@ -467,13 +484,21 @@ final class AmqpConnection(url: AmqpUrl) {
   * one: RabbitMQ queues are not seekable; Kafka-style replay needs a
   * log-structured broker, which the tcp:// transport provides).
   *
-  * `latest` applies a one-time quiescence settle (no delivery for
-  * `settleMs`, capped) after (re)subscribe, so Trigger.AvailableNow
-  * pins a target that includes the broker's pushed backlog — AMQP has
-  * no "end of queue" marker to ask for.
+  * `latest` waits on a count, not on a quiet period: queue.declare-ok's
+  * `message-count` at (re)subscribe, plus the publishes this log makes
+  * on the same session, is what the broker owes the session. `latest`
+  * blocks until the session has received what was owed when it was
+  * called (capped, and ended by connection death), so
+  * Trigger.AvailableNow pins a target that includes the backlog that
+  * was queued at subscribe, and an empty queue answers at once. On
+  * [[AmqpServer]] the count is exact: it is the un-acked suffix the
+  * consumer pump delivers. On RabbitMQ it is the queue's ready count,
+  * which for a fresh channel is the backlog; messages a dead session
+  * still held arrive as redeliveries once the broker requeues them,
+  * and land in a later trigger. `slice` and `ack` wait for a
+  * redelivery only while the session is still owed deliveries.
   */
-final class AmqpConsumerLog(url: AmqpUrl, exchange: String,
-    settleMs: Long = 250, settleCapMs: Long = 3000) extends BrokerLog {
+final class AmqpConsumerLog(url: AmqpUrl, exchange: String) extends BrokerLog {
   def this(host: String, port: Int, exchange: String) =
     this(AmqpUrl(host, port, "guest", "guest", "/", tls = false), exchange)
 
@@ -485,30 +510,53 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String,
   // (deliveryTag, contentType, body); index i => offset base + i
   private val buf = ArrayBuffer.empty[(Long, String, String)]
   private var pubSeq = 0L
-  private var lastEventNanos = System.nanoTime()
-  private var subscribedNanos = 0L
-  private var settled = false
+  // deliveries the broker owes this session, and those it has made
+  private var owed = 0L
+  private var delivered = 0L
+  // the longest `latest` waits for owed deliveries
+  private val latestCapNanos = 3L * 1000000000L
 
   private def ensureConnected(): Unit = lock.synchronized {
     if (conn == null || conn.isDead) {
       // the old session's un-acked deliveries are void: the broker will
       // redeliver them on the new session, renumbering from `base`
       buf.clear()
+      delivered = 0
       val c = new AmqpConnection(url)
       c.onDeliver = (tag, ct, body, _) => lock.synchronized {
-        buf += ((tag, ct, body))
-        lastEventNanos = System.nanoTime()
-        lock.notifyAll()
+        // a replaced session's late delivery is void like its buffer
+        if (conn eq c) {
+          buf += ((tag, ct, body))
+          delivered += 1
+          lock.notifyAll()
+        }
       }
       c.onDead = () => lock.synchronized { lock.notifyAll() }
       c.declareExchange(exchange, "fanout", durable = true, Map.empty)
-      c.declareQueue(exchange)
+      // deliveries wait for this lock and count once `conn` is `c`, so
+      // none is counted before `owed` is set
+      owed = c.declareQueue(exchange).toLong
       c.bind(exchange, exchange)
       c.consume(exchange)
       conn = c
-      settled = false
-      subscribedNanos = System.nanoTime()
-      lastEventNanos = subscribedNanos
+    }
+  }
+
+  /** Waits on `lock` until notified or `deadline` (nanoTime) passes. */
+  private def waitUntil(deadline: Long): Unit =
+    lock.wait(math.max(1L, (deadline - System.nanoTime()) / 1000000L))
+
+  /** Waits (until `deadline`) while the buffer ends before `until` and
+    * the broker still owes this session deliveries. A session that
+    * dies meanwhile is replaced; the new one is owed the un-acked
+    * suffix the broker redelivers.
+    */
+  private def awaitOwed(until: Long, deadline: Long): Unit = {
+    ensureConnected()
+    while (base + buf.size < until && delivered < owed &&
+        System.nanoTime() < deadline) {
+      waitUntil(deadline)
+      ensureConnected()
     }
   }
 
@@ -519,47 +567,54 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String,
     }
   }
 
+  /** Returns once the broker has the message: a passive queue.declare
+    * follows the publish on the same channel, which the broker answers
+    * in order. A session that dies under the publish (a broker restart
+    * its reader has not reported yet) may have dropped it, so it goes
+    * out once more on a fresh session.
+    */
   override def publish(body: String,
-      contentType: String = "application/json"): Long = lock.synchronized {
-    ensureConnected()
-    conn.publish(exchange, body, contentType)
-    pubSeq += 1
-    pubSeq - 1 // client-side publish sequence (AMQP returns no offset)
-  }
-
-  override def latest: Long = {
-    lock.synchronized(ensureConnected())
-    settleIfNeeded()
-    lock.synchronized(base + buf.size)
-  }
-
-  /** One-time-per-connection quiescence wait (see class doc). */
-  private def settleIfNeeded(): Unit = lock.synchronized {
-    if (!settled) {
-      val capDeadline = subscribedNanos + settleCapMs * 1000000L
-      var now = System.nanoTime()
-      while (now - lastEventNanos < settleMs * 1000000L && now < capDeadline &&
-          conn != null && !conn.isDead) {
-        lock.wait(25)
-        now = System.nanoTime()
-      }
-      settled = true
+      contentType: String = "application/json"): Long = {
+    val c = lock.synchronized { ensureConnected(); conn }
+    try publishConfirmed(c, body, contentType)
+    catch {
+      case _: java.io.IOException if c.isDead && c.deadReason.isEmpty =>
+        publishConfirmed(lock.synchronized { ensureConnected(); conn },
+          body, contentType)
     }
+    lock.synchronized { pubSeq += 1; pubSeq - 1 } // AMQP returns no offset
+  }
+
+  // waits for the reply outside `lock`: the reader thread takes it to
+  // hand over deliveries that arrive ahead of the reply
+  private def publishConfirmed(c: AmqpConnection, body: String,
+      contentType: String): Unit = {
+    c.publish(exchange, body, contentType)
+    c.queueBacklog(exchange)
+    // the bound queue routes it back to this session
+    lock.synchronized { if (conn eq c) owed += 1 }
+  }
+
+  override def latest: Long = lock.synchronized {
+    ensureConnected()
+    // what is owed now; publishes racing this call are a later trigger's
+    val target = owed
+    val deadline = System.nanoTime() + latestCapNanos
+    while (delivered < target && !conn.isDead && System.nanoTime() < deadline)
+      waitUntil(deadline)
+    // deliveries the cap outlasted are not waited for again this session
+    if (delivered < target) owed = delivered
+    base + buf.size
   }
 
   override def committed: Long = lock.synchronized(base)
 
   override def slice(from: Long, until: Long): Array[BrokerMessage] =
     lock.synchronized {
-      ensureConnected()
       aligned = true
       // an admitted range is owed to Spark: if a reconnect voided the
       // buffer, wait for the broker to redeliver it (bounded)
-      val deadline = System.nanoTime() + 30L * 1000000000L
-      while (base + buf.size < until && System.nanoTime() < deadline) {
-        ensureConnected()
-        lock.wait(100)
-      }
+      awaitOwed(until, System.nanoTime() + 30L * 1000000000L)
       val lo = math.max(from, base)
       val hi = math.min(until, base + buf.size)
       (lo until hi).map { off =>
@@ -574,11 +629,7 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String,
     if (until > base) {
       // wait (bounded) for the tag of `until - 1` if a reconnect put a
       // redelivery in flight
-      val deadline = System.nanoTime() + 10L * 1000000000L
-      while (base + buf.size < until && System.nanoTime() < deadline) {
-        ensureConnected()
-        lock.wait(100)
-      }
+      awaitOwed(until, System.nanoTime() + 10L * 1000000000L)
       val n = math.min(until - base, buf.size.toLong).toInt
       if (n > 0) {
         val tag = buf(n - 1)._1
@@ -592,8 +643,11 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String,
     }
   }
 
-  def closeConnection(): Unit = lock.synchronized {
-    if (conn != null) { conn.close(); conn = null }
+  def closeConnection(): Unit = {
+    // closes outside `lock`, so the reader can get past a delivery in
+    // flight to the close-ok
+    val c = lock.synchronized { val c = conn; conn = null; c }
+    if (c != null) c.close()
   }
 }
 

@@ -121,6 +121,57 @@ class AmqpSpec extends SparkSpec {
     } finally srv.stop()
   }
 
+  test("latest waits for the backlog queued before subscribe, by count") {
+    val srv = new AmqpServer(0, None)
+    try {
+      val pub = new AmqpConnection("localhost", srv.boundPort)
+      try {
+        pub.declareExchange("owed_backlog", "fanout", durable = true, Map.empty)
+        pub.declareQueue("owed_backlog")
+        pub.bind("owed_backlog", "owed_backlog")
+        (0 until 20000).foreach(i =>
+          pub.publish("owed_backlog", s"""{"i":$i}""", "application/json"))
+        // the broker answers this RPC after every publish sent before it
+        assert(pub.queueBacklog("owed_backlog") == 20000)
+      } finally pub.close()
+      val log = new AmqpConsumerLog("localhost", srv.boundPort, "owed_backlog")
+      try {
+        // queue.declare-ok said 20000: the first latest is all of it
+        assert(log.latest == 20000L)
+        assert(log.slice(19999, 20000).map(_.body).toSeq ==
+          Seq("""{"i":19999}"""))
+      } finally log.closeConnection()
+    } finally srv.stop()
+  }
+
+  test("latest on a never-published queue is 0, without waiting out the cap") {
+    val srv = new AmqpServer(0, None)
+    try {
+      val log = new AmqpConsumerLog("localhost", srv.boundPort, "owed_empty")
+      try {
+        val t0 = System.nanoTime()
+        assert(log.latest == 0L)
+        val secs = (System.nanoTime() - t0) / 1e9
+        assert(secs < 2.0, s"latest on an empty queue took $secs s")
+      } finally log.closeConnection()
+    } finally srv.stop()
+  }
+
+  test("slice past the owed deliveries returns what there is, not at a deadline") {
+    val srv = new AmqpServer(0, None)
+    try {
+      val log = new AmqpConsumerLog("localhost", srv.boundPort, "owed_short")
+      try {
+        (0 until 3).foreach(i => log.publish(s"""{"i":$i}"""))
+        val t0 = System.nanoTime()
+        val msgs = log.slice(0, 10)
+        val secs = (System.nanoTime() - t0) / 1e9
+        assert(msgs.map(_.offset).toSeq == Seq(0L, 1L, 2L))
+        assert(secs < 10.0, s"slice(0, 10) over 3 messages took $secs s")
+      } finally log.closeConnection()
+    } finally srv.stop()
+  }
+
   test("exchange.declare kwargs pass through; durable=false skips the WAL") {
     val wal = tmp("amqp-decl-wal")
     val port = freePort()
@@ -348,6 +399,26 @@ class AmqpSpec extends SparkSpec {
       assert(log.committed == 5L)
       log.closeConnection()
     } finally srv2.stop()
+  }
+
+  test("broker restart: a publish racing the dead session goes out on a new one") {
+    // the consumer's reader thread notices the dead socket at some point
+    // during the next publish; each round lands that publish wherever
+    // the race falls
+    val port = freePort()
+    (0 until 50).foreach { i =>
+      val srv1 = bindServer(port, None)
+      val log = new AmqpConsumerLog("localhost", port, s"race_$i")
+      log.publish("""{"before":1}""")
+      assert(log.latest == 1L)
+      srv1.stop()
+      val srv2 = bindServer(port, None)
+      try {
+        log.publish("""{"after":1}""")
+        assert(log.slice(0, 1).map(_.body).toSeq == Seq("""{"after":1}"""))
+        log.closeConnection()
+      } finally srv2.stop()
+    }
   }
 
   test("streaming query drains an AMQP broker end-to-end") {
