@@ -50,14 +50,16 @@ final class BrokerClient(host: String, port: Int, exchange: String)
       contentType: String = "application/json"): Long =
     simple(s"PUB $exchange ${b64e(contentType)} ${b64e(body)}")(1).toLong
 
-  override def slice(from: Long, until: Long): Array[BrokerMessage] =
+  /** The server's lines are `<offset> <b64(contentType)> <b64(body)>`. */
+  override def slice(from: Long, until: Long): PackedSlice =
     withConn { (in, out) =>
       out.println(s"SLICE $exchange $from $until"); out.flush()
       val n = expectOk(in.readLine())(1).toInt
-      Array.fill(n) {
-        val p = in.readLine().split(" ")
-        BrokerMessage(p(0).toLong, b64d(p(1)), b64d(p(2)))
-      }
+      // -1 keeps the empty base64 of an empty body
+      val lines = Array.fill(n)(in.readLine().split(" ", -1))
+      val bodies = lines.map(p => Base64.getDecoder.decode(p(2)))
+      PackedSlice.pack(lines.headOption.fold(from)(_(0).toLong), n)(
+        i => b64d(lines(i)(1)), bodies(_))
     }
 
   override def latest: Long = simple(s"LATEST $exchange")(1).toLong

@@ -94,7 +94,8 @@ final class BrokerServer(port: Int, walDir: Option[Path]) {
     try {
       var line = in.readLine()
       while (line != null) {
-        try handle(line.split(" "), out)
+        // -1 keeps a trailing empty field: the base64 of an empty body
+        try handle(line.split(" ", -1), out)
         catch { case e: Exception => out.println(s"ERR ${e.getClass.getSimpleName}") }
         out.flush()
         line = in.readLine()
@@ -111,10 +112,13 @@ final class BrokerServer(port: Int, walDir: Option[Path]) {
       val msgs = log(parts(1)).slice(parts(2).toLong, parts(3).toLong)
       out.println(s"OK ${msgs.length}")
       val enc = Base64.getEncoder
-      msgs.foreach { m =>
-        out.println(s"${m.offset} " +
-          s"${enc.encodeToString(m.contentType.getBytes(UTF_8))} " +
-          s"${enc.encodeToString(m.body.getBytes(UTF_8))}")
+      val types = msgs.types.map(t => enc.encodeToString(t.getBytes(UTF_8)))
+      var i = 0
+      while (i < msgs.length) {
+        val body = java.util.Arrays.copyOfRange(msgs.bytes, msgs.start(i), msgs.end(i))
+        out.println(s"${msgs.first + i} ${types(msgs.typeIndex(i))} " +
+          enc.encodeToString(body))
+        i += 1
       }
     case "LATEST"    => out.println(s"OK ${log(parts(1)).latest}")
     case "COMMITTED" => out.println(s"OK ${log(parts(1)).committed}")

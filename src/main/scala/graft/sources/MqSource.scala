@@ -48,6 +48,13 @@ import org.apache.spark.unsafe.types.UTF8String
   * after the restart: (batch, slice index) names the same messages in
   * every run, the key [[graft.sinks.SqlSink.idempotentForeachBatch]]
   * marks graftmq batches by.
+  *
+  * A partition is one slice. Over `tcp://` it names the slice and its
+  * executor fetches it; otherwise it carries the slice's messages as a
+  * [[PackedSlice]], and the reader wraps each body's UTF-8 bytes as the
+  * row's `value` in place. Under `maxMessagesPerTrigger`, `latestOffset`
+  * waits only for the messages the batch admits (an AMQP consumer may
+  * still be receiving its backlog); `reportLatestOffset` never waits.
   */
 class MqDataSource extends TableProvider with DataSourceRegister {
   override def shortName(): String = "graftmq"
@@ -164,14 +171,13 @@ class MqMicroBatchStream(exchangeName: String, maxPerTrigger: Option[Long],
     // realignment (AMQP transport) can sit below the checkpointed
     // start; such a stale pin is ignored rather than clamping the
     // stream backwards
-    val avail = availableTarget match {
-      case Some(t) if t >= from => math.min(log.latest, t)
-      case _                    => log.latest
+    val pin = availableTarget.filter(_ >= from).getOrElse(Long.MaxValue)
+    val admit = limit match {
+      case mr: ReadMaxRows => math.min(pin, from + mr.maxRows)
+      case _               => pin
     }
-    val end = limit match {
-      case mr: ReadMaxRows => math.min(avail, from + mr.maxRows)
-      case _               => avail
-    }
+    // wait only for the messages this batch can admit
+    val end = math.min(log.latestUpTo(admit), admit)
     // only a slot-derived width above the floor is recorded: planning
     // falls back to the floor (or the fixed `rowsPerPartition`) itself,
     // so a batch of up to slots × MinWidth rows costs no write
@@ -192,7 +198,11 @@ class MqMicroBatchStream(exchangeName: String, maxPerTrigger: Option[Long],
     throw new UnsupportedOperationException(
       "latestOffset(start, limit) is used (SupportsAdmissionControl)")
 
-  override def reportLatestOffset(): Offset = MqOffset(log.latest)
+  /** What the log holds plus what its transport is still owed, without
+    * waiting: Spark calls this right after [[latestOffset]], for its
+    * progress report.
+    */
+  override def reportLatestOffset(): Offset = MqOffset(log.latestOwed)
 
   /** The admitted range is cut into slices of the width recorded for
     * it, one input partition each: a pure function of the checkpoint.
@@ -201,8 +211,9 @@ class MqMicroBatchStream(exchangeName: String, maxPerTrigger: Option[Long],
     * recorded) is cut at `rowsPerPartition` or 5000. With a `broker`
     * server the partitions carry only (url, exchange, lo, hi) and each
     * EXECUTOR fetches its own slice over TCP — rows never pass through
-    * the driver. The in-JVM transport inlines the rows (driver ==
-    * executor JVM in local mode).
+    * the driver. The in-JVM and AMQP transports inline the slice as one
+    * [[PackedSlice]] (UTF-8 bodies in one array), which Java-serializes
+    * into the task as a few arrays, not an object per message.
     */
   override def planInputPartitions(start: Offset, end: Offset): Array[InputPartition] = {
     val from = start.asInstanceOf[MqOffset].pos
@@ -258,25 +269,39 @@ object MqMicroBatchStream {
   val MinWidth = 5000L
 }
 
-case class MqInlinePartition(exchange: String, msgs: Array[BrokerMessage])
+/** A slice carried inside its task: the bodies as one packed UTF-8
+  * array ([[PackedSlice]]), which the reader wraps row by row.
+  */
+case class MqInlinePartition(exchange: String, msgs: PackedSlice)
     extends InputPartition
 
 case class MqRemotePartition(url: String, exchange: String, from: Long, until: Long)
     extends InputPartition
 
-class MqPartitionReader(exchange: String, msgs: Array[BrokerMessage])
+/** Rows over a packed slice: each `value` wraps its body's bytes in
+  * place (no copy, no re-encoding); content types are converted once per
+  * dictionary entry. A body that is not valid UTF-8 (an AMQP broker
+  * passes a publisher's bytes on as they are) is decoded with
+  * replacement characters instead, as the `tcp://` broker does on
+  * publish, so every transport yields the same `value`.
+  */
+class MqPartitionReader(exchange: String, msgs: PackedSlice)
     extends PartitionReader[InternalRow] {
   private var i = -1
   private val nowUs = System.currentTimeMillis() * 1000L
   private val exchangeUtf8 = UTF8String.fromString(exchange)
+  private val types = msgs.types.map(UTF8String.fromString)
   override def next(): Boolean = { i += 1; i < msgs.length }
   override def get(): InternalRow = {
-    val m = msgs(i)
+    val start = msgs.start(i)
+    val len = msgs.end(i) - start
+    val body = UTF8String.fromBytes(msgs.bytes, start, len)
     InternalRow(
-      UTF8String.fromString(m.body),
+      if (body.isValid) body
+      else UTF8String.fromString(new String(msgs.bytes, start, len, UTF_8)),
       exchangeUtf8,
-      UTF8String.fromString(m.contentType),
-      m.offset,
+      types(msgs.typeIndex(i)),
+      msgs.first + i,
       nowUs)
   }
   override def close(): Unit = ()

@@ -8,7 +8,7 @@ import java.util.concurrent.{ConcurrentHashMap, LinkedBlockingQueue, TimeUnit}
 import scala.collection.mutable.ArrayBuffer
 import scala.reflect.ClassTag
 
-import graft.sources.{BrokerLog, BrokerMessage}
+import graft.sources.{BrokerLog, PackedSlice}
 
 import Amqp._
 
@@ -51,9 +51,10 @@ final class AmqpConnection(url: AmqpUrl) {
   def deadReason: Option[String] = deathReason
 
   /** Called for each assembled delivery: (deliveryTag, contentType,
-    * body, redelivered). Set before [[consume]].
+    * body, redelivered), the body as the UTF-8 bytes the reader
+    * assembled (it is not used again). Set before [[consume]].
     */
-  @volatile var onDeliver: (Long, String, String, Boolean) => Unit =
+  @volatile var onDeliver: (Long, String, Array[Byte], Boolean) => Unit =
     (_, _, _, _) => ()
   /** Called once when the connection dies (reader IOException). */
   @volatile var onDead: () => Unit = () => ()
@@ -142,7 +143,7 @@ final class AmqpConnection(url: AmqpUrl) {
   sock.setSoTimeout(stackRemainingMs().getOrElse(0))
   sock.setTcpNoDelay(true)
   private val in = new DataInputStream(
-    new java.io.BufferedInputStream(sock.getInputStream))
+    new java.io.BufferedInputStream(sock.getInputStream, 1 << 16))
   private val out = new DataOutputStream(
     new java.io.BufferedOutputStream(sock.getOutputStream))
   // frame_max URL param lowers the cap we negotiate down from
@@ -217,9 +218,13 @@ final class AmqpConnection(url: AmqpUrl) {
       throw stackTimeoutError()
   }
 
-  private def sendFrames(frames: Frame*): Unit = out.synchronized {
+  private def sendFrames(frames: Frame*): Unit =
+    sendWith(frames.foreach(writeFrame(out, _)))
+
+  /** Runs `write` against `out` under its lock, then flushes. */
+  private def sendWith(write: => Unit): Unit = out.synchronized {
     try {
-      frames.foreach(writeFrame(out, _))
+      write
       out.flush()
     } catch {
       // a failed write may leave a torn frame on the wire: the
@@ -244,19 +249,21 @@ final class AmqpConnection(url: AmqpUrl) {
   @volatile var onReturn: (Int, String, String, String) => Unit =
     (_, _, _, _) => ()
 
-  private def finishDeliveryIfComplete(): Unit =
-    (pendingDeliver, pendingReturn, pendingHeader) match {
-      case (Some(d), _, Some(h)) if bodyBuf.size() >= h.bodySize =>
-        val body = new String(bodyBuf.toByteArray, UTF_8)
-        pendingDeliver = None; pendingHeader = None; bodyBuf.reset()
+  /** Hands the assembled content to its delivery or return. */
+  private def finishContent(body: Array[Byte]): Unit = {
+    val h = pendingHeader.get
+    pendingHeader = None; bodyBuf.reset()
+    (pendingDeliver, pendingReturn) match {
+      case (Some(d), _) =>
+        pendingDeliver = None
         onDeliver(d.deliveryTag, h.contentType.getOrElse("application/json"),
           body, d.redelivered)
-      case (_, Some(r0), Some(h)) if bodyBuf.size() >= h.bodySize =>
-        val body = new String(bodyBuf.toByteArray, UTF_8)
-        pendingReturn = None; pendingHeader = None; bodyBuf.reset()
-        onReturn(r0.replyCode, r0.replyText, r0.exchange, body)
+      case (_, Some(r0)) =>
+        pendingReturn = None
+        onReturn(r0.replyCode, r0.replyText, r0.exchange, new String(body, UTF_8))
       case _ => ()
     }
+  }
 
   private val reader = new Thread(() => {
     try {
@@ -291,11 +298,18 @@ final class AmqpConnection(url: AmqpUrl) {
             case m => replies.put(m)
           }
           case FrameHeader =>
-            pendingHeader = Some(parseHeader(f.payload))
-            finishDeliveryIfComplete()
-          case FrameBody =>
-            bodyBuf.write(f.payload)
-            finishDeliveryIfComplete()
+            val h = parseHeader(f.payload)
+            pendingHeader = Some(h)
+            if (h.bodySize == 0) finishContent(Array.emptyByteArray)
+          case FrameBody => pendingHeader match {
+            // a body in one frame is that frame's payload, uncopied
+            case Some(h) if bodyBuf.size() == 0 && f.payload.length >= h.bodySize =>
+              finishContent(f.payload)
+            case Some(h) =>
+              bodyBuf.write(f.payload)
+              if (bodyBuf.size() >= h.bodySize) finishContent(bodyBuf.toByteArray)
+            case None => ()
+          }
           case _ => ()
         }
       }
@@ -419,7 +433,12 @@ final class AmqpConnection(url: AmqpUrl) {
       Map.empty)).consumerTag
 
   def publish(exchange: String, body: String, contentType: String,
-      mandatory: Boolean = false): Unit = {
+      mandatory: Boolean = false): Unit =
+    publish(exchange, body.getBytes(UTF_8), contentType, mandatory)
+
+  /** basic.publish of a body's bytes, sent as they are. */
+  def publish(exchange: String, body: Array[Byte], contentType: String,
+      mandatory: Boolean): Unit = {
     // a blocked broker has stopped reading: stall the publish until
     // connection.unblocked (or death — including the blocked-timeout
     // teardown) instead of stuffing the socket buffer
@@ -428,13 +447,13 @@ final class AmqpConnection(url: AmqpUrl) {
     }
     if (deadFlag) throw new java.io.IOException(
       deathReason.getOrElse("connection is dead"))
-    val bytes = body.getBytes(UTF_8)
-    val frames =
-      methodFrame(1, BasicPublish(exchange, routingKey = "",
-        mandatory = mandatory, immediate = false)) +:
-      headerFrame(1, ContentHeader(bytes.length, Some(contentType), Some(2))) +:
-      bodyFrames(1, bytes, frameMax)
-    sendFrames(frames: _*)
+    sendWith {
+      writeFrame(out, methodFrame(1, BasicPublish(exchange, routingKey = "",
+        mandatory = mandatory, immediate = false)))
+      writeFrame(out, headerFrame(1,
+        ContentHeader(body.length, Some(contentType), Some(2))))
+      writeBodyFrames(out, 1, body, 0, body.length, frameMax)
+    }
   }
 
   /** basic.nack on the wire — pika's `basic_nack` shape (the
@@ -497,6 +516,17 @@ final class AmqpConnection(url: AmqpUrl) {
   * still held arrive as redeliveries once the broker requeues them,
   * and land in a later trigger. `slice` and `ack` wait for a
   * redelivery only while the session is still owed deliveries.
+  *
+  * A micro-batch capped at `size_limit` waits only for the range it
+  * admits: `latestUpTo(until)` returns once the buffer reaches `until`
+  * or holds what is owed. Deliveries the cap outlasts are not waited
+  * for again this session; reaching the admitted range first does not
+  * count as that. `latestOwed` (Spark's reported latest offset) does
+  * not wait: it is the buffer's end plus the deliveries still owed.
+  *
+  * Wake rule: a waiter records the delivered count it needs, and the
+  * delivery callback wakes it only once that count is reached (or the
+  * connection dies), not on every delivery.
   */
 final class AmqpConsumerLog(url: AmqpUrl, exchange: String) extends BrokerLog {
   def this(host: String, port: Int, exchange: String) =
@@ -507,12 +537,14 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String) extends BrokerLog {
   private var base = 0L
   private var alignOffered = false
   private var aligned = false
-  // (deliveryTag, contentType, body); index i => offset base + i
-  private val buf = ArrayBuffer.empty[(Long, String, String)]
+  // index i => offset base + i
+  private val buf = ArrayBuffer.empty[AmqpConsumerLog.Delivery]
   private var pubSeq = 0L
   // deliveries the broker owes this session, and those it has made
   private var owed = 0L
   private var delivered = 0L
+  // the smallest delivered count a waiter needs before it is woken
+  private var wakeAt = Long.MaxValue
   // the longest `latest` waits for owed deliveries
   private val latestCapNanos = 3L * 1000000000L
 
@@ -526,12 +558,12 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String) extends BrokerLog {
       c.onDeliver = (tag, ct, body, _) => lock.synchronized {
         // a replaced session's late delivery is void like its buffer
         if (conn eq c) {
-          buf += ((tag, ct, body))
+          buf += AmqpConsumerLog.Delivery(tag, ct, body)
           delivered += 1
-          lock.notifyAll()
+          if (delivered >= wakeAt) wake()
         }
       }
-      c.onDead = () => lock.synchronized { lock.notifyAll() }
+      c.onDead = () => lock.synchronized(wake())
       c.declareExchange(exchange, "fanout", durable = true, Map.empty)
       // deliveries wait for this lock and count once `conn` is `c`, so
       // none is counted before `owed` is set
@@ -542,9 +574,23 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String) extends BrokerLog {
     }
   }
 
-  /** Waits on `lock` until notified or `deadline` (nanoTime) passes. */
-  private def waitUntil(deadline: Long): Unit =
+  private def wake(): Unit = { wakeAt = Long.MaxValue; lock.notifyAll() }
+
+  /** The delivered count at which the buffer reaches `until`, or at
+    * which the session has everything it is owed, whichever is less.
+    */
+  private def needed(until: Long): Long = {
+    val short = until - (base + buf.size)
+    if (short >= owed - delivered) owed else delivered + math.max(0L, short)
+  }
+
+  /** Waits on `lock` until `delivered` reaches `count`, the connection
+    * dies, or `deadline` (nanoTime) passes; woken once, not per delivery.
+    */
+  private def waitFor(count: Long, deadline: Long): Unit = {
+    wakeAt = math.min(wakeAt, count)
     lock.wait(math.max(1L, (deadline - System.nanoTime()) / 1000000L))
+  }
 
   /** Waits (until `deadline`) while the buffer ends before `until` and
     * the broker still owes this session deliveries. A session that
@@ -553,9 +599,8 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String) extends BrokerLog {
     */
   private def awaitOwed(until: Long, deadline: Long): Unit = {
     ensureConnected()
-    while (base + buf.size < until && delivered < owed &&
-        System.nanoTime() < deadline) {
-      waitUntil(deadline)
+    while (delivered < needed(until) && System.nanoTime() < deadline) {
+      waitFor(needed(until), deadline)
       ensureConnected()
     }
   }
@@ -595,32 +640,38 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String) extends BrokerLog {
     lock.synchronized { if (conn eq c) owed += 1 }
   }
 
-  override def latest: Long = lock.synchronized {
+  override def latest: Long = latestUpTo(Long.MaxValue)
+
+  override def latestUpTo(until: Long): Long = lock.synchronized {
     ensureConnected()
     // what is owed now; publishes racing this call are a later trigger's
-    val target = owed
+    val target = needed(until)
+    val c = conn
     val deadline = System.nanoTime() + latestCapNanos
-    while (delivered < target && !conn.isDead && System.nanoTime() < deadline)
-      waitUntil(deadline)
+    while (delivered < target && (conn eq c) && !c.isDead &&
+        System.nanoTime() < deadline)
+      waitFor(target, deadline)
     // deliveries the cap outlasted are not waited for again this session
-    if (delivered < target) owed = delivered
+    if (delivered < target && (conn eq c)) owed = delivered
     base + buf.size
   }
 
+  override def latestOwed: Long =
+    lock.synchronized(base + buf.size + math.max(0L, owed - delivered))
+
   override def committed: Long = lock.synchronized(base)
 
-  override def slice(from: Long, until: Long): Array[BrokerMessage] =
+  override def slice(from: Long, until: Long): PackedSlice =
     lock.synchronized {
       aligned = true
       // an admitted range is owed to Spark: if a reconnect voided the
       // buffer, wait for the broker to redeliver it (bounded)
       awaitOwed(until, System.nanoTime() + 30L * 1000000000L)
       val lo = math.max(from, base)
-      val hi = math.min(until, base + buf.size)
-      (lo until hi).map { off =>
-        val (_, ct, body) = buf((off - base).toInt)
-        BrokerMessage(off, ct, body)
-      }.toArray
+      val hi = math.max(lo, math.min(until, base + buf.size))
+      val i0 = (lo - base).toInt
+      PackedSlice.pack(lo, (hi - lo).toInt)(
+        i => buf(i0 + i).contentType, i => buf(i0 + i).body)
     }
 
   override def ack(until: Long): Unit = lock.synchronized {
@@ -632,7 +683,7 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String) extends BrokerLog {
       awaitOwed(until, System.nanoTime() + 10L * 1000000000L)
       val n = math.min(until - base, buf.size.toLong).toInt
       if (n > 0) {
-        val tag = buf(n - 1)._1
+        val tag = buf(n - 1).tag
         try conn.ack(tag, multiple = true)
         catch { case _: java.io.IOException => () } // redelivery will renumber
         buf.remove(0, n)
@@ -649,6 +700,11 @@ final class AmqpConsumerLog(url: AmqpUrl, exchange: String) extends BrokerLog {
     val c = lock.synchronized { val c = conn; conn = null; c }
     if (c != null) c.close()
   }
+}
+
+object AmqpConsumerLog {
+  private final case class Delivery(tag: Long, contentType: String,
+      body: Array[Byte])
 }
 
 /** Per-JVM registry of persistent AMQP consumers, one per

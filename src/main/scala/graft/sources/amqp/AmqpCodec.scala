@@ -457,10 +457,22 @@ object Amqp {
     ContentHeader(size, ct, dm)
   }
 
-  /** Fragment a body at the negotiated frame-max. */
-  def bodyFrames(channel: Int, body: Array[Byte], frameMax: Int): Seq[Frame] = {
+  /** Writes `len` body bytes from `body(off)` as body frames fragmented
+    * at the negotiated frame-max (none for an empty body), without
+    * copying them into frames.
+    */
+  def writeBodyFrames(out: DataOutputStream, channel: Int, body: Array[Byte],
+      off: Int, len: Int, frameMax: Int): Unit = {
     val chunk = math.max(1, frameMax - 8)
-    if (body.isEmpty) Seq.empty
-    else body.grouped(chunk).map(b => Frame(FrameBody, channel, b)).toSeq
+    var p = off
+    while (p < off + len) {
+      val n = math.min(chunk, off + len - p)
+      out.writeByte(FrameBody)
+      out.writeShort(channel)
+      out.writeInt(n)
+      out.write(body, p, n)
+      out.writeByte(FrameEnd)
+      p += n
+    }
   }
 }

@@ -233,7 +233,7 @@ final class AmqpServer(port: Int, walDir: Option[Path],
     private val in = new DataInputStream(
       new java.io.BufferedInputStream(sock.getInputStream))
     private val out = new DataOutputStream(
-      new java.io.BufferedOutputStream(sock.getOutputStream))
+      new java.io.BufferedOutputStream(sock.getOutputStream, 1 << 16))
     private val channels = new ConcurrentHashMap[Int, ChannelState]()
     @volatile private var alive = true
     private var frameMax = DefaultFrameMax
@@ -397,17 +397,17 @@ final class AmqpServer(port: Int, walDir: Option[Path],
           // back to the publisher, never enqueued (spec §3.1.10 /
           // basic.return; pika surfaces this as on_return_callback)
           if (pub.mandatory && !bindings.containsValue(pub.exchange)) {
-            val frames =
-              methodFrame(channel, BasicReturn(312, "NO_ROUTE",
-                pub.exchange, pub.routingKey)) +:
-              headerFrame(channel, ContentHeader(body.length,
+            out.synchronized {
+              writeFrame(out, methodFrame(channel, BasicReturn(312, "NO_ROUTE",
+                pub.exchange, pub.routingKey)))
+              writeFrame(out, headerFrame(channel, ContentHeader(body.length,
                 Some(hdr.contentType.getOrElse("application/json")),
-                Some(2))) +:
-              bodyFrames(channel, body, frameMax)
-            send(frames: _*)
+                Some(2))))
+              writeBodyFrames(out, channel, body, 0, body.length, frameMax)
+              out.flush()
+            }
           } else {
-            log(pub.exchange).publish(
-              new String(body, java.nio.charset.StandardCharsets.UTF_8),
+            log(pub.exchange).append(body,
               hdr.contentType.getOrElse("application/json"))
             recheckWatermark()
           }
@@ -552,6 +552,11 @@ final class AmqpServer(port: Int, walDir: Option[Path],
     /** Consumer pump: pushes the un-acked suffix of the exchange log as
       * basic.deliver (+ header/body) frames, honouring the channel's
       * basic.qos prefetch window (outstanding = delivered − acked).
+      * Each turn takes the log's undelivered range as one packed slice,
+      * writes each delivery's frames together under the output lock,
+      * and flushes once at the end of the range: a backlog leaves in
+      * buffer-sized writes, and a trickle (a range of one) still leaves
+      * on the turn it arrived.
       */
     private def startConsumer(channel: Int, st: ChannelState, tag: String,
         exchange: String): Unit = {
@@ -572,22 +577,24 @@ final class AmqpServer(port: Int, walDir: Option[Path],
               if (limit <= 0) lg.latest
               else math.min(lg.latest,
                 nextOff + math.max(0L, limit - outstanding))
-            val msgs = if (until > nextOff) lg.slice(nextOff, until)
-                       else Array.empty[graft.sources.BrokerMessage]
+            val msgs = lg.slice(nextOff, until)
             if (msgs.nonEmpty) {
-              msgs.foreach { msg =>
-                val bytes = msg.body.getBytes(
-                  java.nio.charset.StandardCharsets.UTF_8)
-                val frames =
-                  methodFrame(channel,
-                    BasicDeliver(tag, msg.offset + 1, redelivered = false,
-                      exchange, "")) +:
-                  headerFrame(channel,
-                    ContentHeader(bytes.length, Some(msg.contentType), Some(2))) +:
-                  bodyFrames(channel, bytes, frameMax)
-                send(frames: _*)
-                nextOff = msg.offset + 1
+              var i = 0
+              while (i < msgs.length) {
+                val off = msgs.first + i
+                val start = msgs.start(i)
+                val len = msgs.end(i) - start
+                out.synchronized {
+                  writeFrame(out, methodFrame(channel,
+                    BasicDeliver(tag, off + 1, redelivered = false, exchange, "")))
+                  writeFrame(out, headerFrame(channel,
+                    ContentHeader(len, Some(msgs.contentType(i)), Some(2))))
+                  writeBodyFrames(out, channel, msgs.bytes, start, len, frameMax)
+                }
+                nextOff = off + 1
+                i += 1
               }
+              out.synchronized(out.flush())
             } else Thread.sleep(2)
           }
         } catch {

@@ -206,7 +206,7 @@ class AmqpAuthSpec extends AnyFunSuite {
         // the keepalive-tuned socket still speaks the protocol: a
         // publish/consume roundtrip proves the options didn't wedge it
         val got = new java.util.concurrent.LinkedBlockingQueue[String]()
-        c.onDeliver = (_, _, body, _) => got.put(body)
+        c.onDeliver = (_, _, body, _) => got.put(new String(body, "UTF-8"))
         c.declareExchange("cp_rt", "fanout", durable = false, Map.empty)
         c.declareQueue("cp_rt")
         c.bind("cp_rt", "cp_rt")
@@ -229,7 +229,7 @@ class AmqpAuthSpec extends AnyFunSuite {
       val got = new java.util.concurrent.LinkedBlockingQueue[String]()
       val c = new AmqpConnection(url)
       try {
-        c.onDeliver = (_, _, body, _) => got.put(body)
+        c.onDeliver = (_, _, body, _) => got.put(new String(body, "UTF-8"))
         c.declareExchange("hb_rt", "fanout", durable = false, Map.empty)
         c.declareQueue("hb_rt")
         c.bind("hb_rt", "hb_rt")
@@ -323,7 +323,7 @@ class AmqpAuthSpec extends AnyFunSuite {
       val got = new java.util.concurrent.LinkedBlockingQueue[String]()
       val c = new AmqpConnection(url)
       try {
-        c.onDeliver = (_, _, body, _) => got.put(body)
+        c.onDeliver = (_, _, body, _) => got.put(new String(body, "UTF-8"))
         c.declareExchange("auth_rt", "fanout", durable = false, Map.empty)
         c.declareQueue("auth_rt")
         c.bind("auth_rt", "auth_rt")
@@ -425,7 +425,7 @@ class AmqpAuthSpec extends AnyFunSuite {
     val got = new java.util.concurrent.LinkedBlockingQueue[String]()
     val c = new AmqpConnection(url)
     try {
-      c.onDeliver = (_, _, body, _) => got.put(body)
+      c.onDeliver = (_, _, body, _) => got.put(new String(body, "UTF-8"))
       c.declareExchange(exchange, "fanout", durable = false, Map.empty)
       c.declareQueue(exchange)
       c.bind(exchange, exchange)

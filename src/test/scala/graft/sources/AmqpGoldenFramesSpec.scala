@@ -24,6 +24,7 @@ import graft.sources.amqp.Amqp._
   * }}}
   */
 class AmqpGoldenFramesSpec extends AnyFunSuite {
+  import AmqpGoldenFramesSpec.bodyFrames
 
   private def hex(s: String): Array[Byte] =
     s.replaceAll("(?m)#.*$", "").replaceAll("\\s+", "")
@@ -315,5 +316,17 @@ class AmqpGoldenFramesSpec extends AnyFunSuite {
     assert(frames.size == 10)
     assert(frames.forall(_.payload.length == 100))
     assert(frames.flatMap(_.payload).toSeq == body.toSeq)
+  }
+}
+
+object AmqpGoldenFramesSpec {
+  /** The body frames [[Amqp.writeBodyFrames]] puts on the wire for `body`,
+    * read back one by one.
+    */
+  def bodyFrames(channel: Int, body: Array[Byte], frameMax: Int): Seq[Frame] = {
+    val bos = new ByteArrayOutputStream()
+    writeBodyFrames(new DataOutputStream(bos), channel, body, 0, body.length, frameMax)
+    val in = new DataInputStream(new ByteArrayInputStream(bos.toByteArray))
+    Iterator.continually(in).takeWhile(_.available() > 0).map(readFrame).toSeq
   }
 }

@@ -3,6 +3,7 @@ package graft.sources
 import java.util.concurrent.ConcurrentLinkedQueue
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.connector.read.streaming.ReadLimit
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.SparkSpec
@@ -54,6 +55,7 @@ class AmqpSpec extends SparkSpec {
 
   test("codec: method, table, header and body frames round-trip") {
     import Amqp._
+    import AmqpGoldenFramesSpec.bodyFrames
     val methods: Seq[Method] = Seq(
       ConnectionStart(Map("product" -> "x", "ver" -> 42, "big" -> 7L,
         "flag" -> true, "nested" -> Map("k" -> "v")), "PLAIN", "en_US"),
@@ -169,6 +171,121 @@ class AmqpSpec extends SparkSpec {
         assert(msgs.map(_.offset).toSeq == Seq(0L, 1L, 2L))
         assert(secs < 10.0, s"slice(0, 10) over 3 messages took $secs s")
       } finally log.closeConnection()
+    } finally srv.stop()
+  }
+
+  test("a size-capped batch waits only for the rows it admits; the report and the AvailableNow pin count the whole backlog") {
+    val srv = new AmqpServer(0, None)
+    val ex = "admitted_wait"
+    try {
+      val pub = new AmqpConnection("localhost", srv.boundPort)
+      try {
+        pub.declareExchange(ex, "fanout", durable = true, Map.empty)
+        pub.declareQueue(ex)
+        pub.bind(ex, ex)
+        (0 until 40000).foreach(i =>
+          pub.publish(ex, s"""{"i":$i}""", "application/json"))
+        assert(pub.queueBacklog(ex) == 40000)
+      } finally pub.close()
+      val url = s"amqp://localhost:${srv.boundPort}"
+      val stream = new MqMicroBatchStream(ex, Some(20000L), Some(url), 5000)
+      try {
+        assert(stream.latestOffset(MqOffset(0), ReadLimit.maxRows(20000)) ==
+          MqOffset(20000))
+        // buffered plus owed, without waiting
+        assert(stream.reportLatestOffset() == MqOffset(40000))
+        stream.prepareForTriggerAvailableNow()
+        // a publish after the pin is a later drain's
+        AmqpBroker.log("localhost", srv.boundPort, ex).publish("""{"late":1}""")
+        assert(stream.latestOffset(MqOffset(0), ReadLimit.allAvailable()) ==
+          MqOffset(40000))
+      } finally AmqpBroker.log("localhost", srv.boundPort, ex).closeConnection()
+    } finally srv.stop()
+  }
+
+  /** A relay to the broker at `port` that passes the broker's frames on
+    * until `bodies` body frames have gone through, then holds the rest
+    * back: a broker whose deliveries stall mid-backlog. Returns the
+    * relay's port and a function that closes it.
+    */
+  private def stallingRelay(port: Int, bodies: Int): (Int, () => Unit) = {
+    val ss = new java.net.ServerSocket(0)
+    val socks = new ConcurrentLinkedQueue[java.net.Socket]()
+    val t = new Thread(() =>
+      try {
+        val client = ss.accept(); socks.add(client)
+        val broker = new java.net.Socket("localhost", port); socks.add(broker)
+        val up = new Thread(() =>
+          try client.getInputStream.transferTo(broker.getOutputStream)
+          catch { case _: java.io.IOException => () })
+        up.setDaemon(true); up.start()
+        val in = new java.io.DataInputStream(
+          new java.io.BufferedInputStream(broker.getInputStream))
+        val out = new java.io.DataOutputStream(
+          new java.io.BufferedOutputStream(client.getOutputStream))
+        var n = 0
+        while (n < bodies) {
+          val f = Amqp.readFrame(in)
+          Amqp.writeFrame(out, f)
+          if (f.tpe == Amqp.FrameBody) n += 1
+          if (in.available() == 0) out.flush()
+        }
+        out.flush()
+      } catch { case _: java.io.IOException => () })
+    t.setDaemon(true); t.start()
+    (ss.getLocalPort, () => { ss.close(); socks.forEach(_.close()) })
+  }
+
+  test("a size-capped batch returns once its rows arrive, while the rest of the backlog is still owed") {
+    val srv = new AmqpServer(0, None)
+    val ex = "admitted_stall"
+    try {
+      val pub = new AmqpConnection("localhost", srv.boundPort)
+      try {
+        pub.declareExchange(ex, "fanout", durable = true, Map.empty)
+        pub.declareQueue(ex)
+        pub.bind(ex, ex)
+        (0 until 40000).foreach(i =>
+          pub.publish(ex, s"""{"i":$i}""", "application/json"))
+        assert(pub.queueBacklog(ex) == 40000)
+      } finally pub.close()
+      // the consumer receives 30000 of the 40000 it is owed
+      val (port, closeRelay) = stallingRelay(srv.boundPort, 30000)
+      val stream = new MqMicroBatchStream(ex, Some(20000L),
+        Some(s"amqp://localhost:$port"), 5000)
+      try {
+        assert(stream.latestOffset(MqOffset(0), ReadLimit.maxRows(20000)) ==
+          MqOffset(20000))
+        // the 10000 held back are still owed: a wait for the whole
+        // backlog would have run out its cap and given them up
+        assert(stream.reportLatestOffset() == MqOffset(40000))
+      } finally {
+        closeRelay()
+        AmqpBroker.log("localhost", port, ex).closeConnection()
+      }
+    } finally srv.stop()
+  }
+
+  test("a message published to an idle consumer arrives in under 1 s") {
+    val srv = new AmqpServer(0, None)
+    try {
+      val got = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val sub = new AmqpConnection("localhost", srv.boundPort)
+      val pub = new AmqpConnection("localhost", srv.boundPort)
+      try {
+        sub.onDeliver = (_, _, body, _) => got.put(new String(body, "UTF-8"))
+        sub.declareExchange("idle_flush", "fanout", durable = false, Map.empty)
+        sub.declareQueue("idle_flush")
+        sub.bind("idle_flush", "idle_flush")
+        sub.consume("idle_flush")
+        Thread.sleep(200) // the pump idles on an empty log
+        val t0 = System.nanoTime()
+        pub.publish("idle_flush", """{"one":1}""", "application/json")
+        val body = got.poll(5, java.util.concurrent.TimeUnit.SECONDS)
+        val secs = (System.nanoTime() - t0) / 1e9
+        assert(body == """{"one":1}""")
+        assert(secs < 1.0, s"the delivery took $secs s")
+      } finally { pub.close(); sub.close() }
     } finally srv.stop()
   }
 
