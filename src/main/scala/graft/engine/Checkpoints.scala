@@ -1,6 +1,9 @@
 package graft.engine
 
-import org.apache.spark.sql.DataFrame
+import scala.reflect.ClassTag
+
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.storage.StorageLevel
 
 /** Lineage cut for iterative operators (PageRank, BFS, connected
@@ -29,14 +32,22 @@ import org.apache.spark.storage.StorageLevel
 object Checkpoints {
   val ConfKey = "graft.checkpoint.dir"
 
+  /** The configured reliable-checkpoint root, pointed at on the
+    * context; None selects the local path.
+    */
+  private def reliableDir(spark: SparkSession): Option[String] =
+    spark.conf.getOption(ConfKey).filter(_.nonEmpty).map { dir =>
+      val sc = spark.sparkContext
+      // setCheckpointDir creates a unique subdir per context; only
+      // (re)point it when the configured root actually changed
+      if (!sc.getCheckpointDir.exists(_.startsWith(dir)))
+        sc.setCheckpointDir(dir)
+      dir
+    }
+
   def cut(df: DataFrame): DataFrame =
-    df.sparkSession.conf.getOption(ConfKey).filter(_.nonEmpty) match {
-      case Some(dir) =>
-        val sc = df.sparkSession.sparkContext
-        // setCheckpointDir creates a unique subdir per context; only
-        // (re)point it when the configured root actually changed
-        if (!sc.getCheckpointDir.exists(_.startsWith(dir)))
-          sc.setCheckpointDir(dir)
+    reliableDir(df.sparkSession) match {
+      case Some(_) =>
         org.apache.spark.sql.GraftBridge.clampCheckpointStats(df.checkpoint())
       case None =>
         // clampCheckpointStats: without it, a loop that joins a cut
@@ -45,6 +56,22 @@ object Checkpoints {
         org.apache.spark.sql.GraftBridge.clampCheckpointStats(
           df.localCheckpoint(true, StorageLevel.MEMORY_AND_DISK_SER))
     }
+
+  /** [[cut]] for an RDD superstep: the same policy (reliable
+    * `checkpoint()` under [[ConfKey]], else a MEMORY_AND_DISK_SER
+    * `localCheckpoint`), materialized by ONE job that also applies `f`
+    * to each partition — so a round's cut and its per-partition
+    * summary (a changed-row count) cost a single action. Returns `f`'s
+    * results in partition order; `unpersist` frees the blocks. On
+    * the reliable path Spark writes the files with a second job that
+    * reads the persisted blocks.
+    */
+  def cutRdd[T, U: ClassTag](spark: SparkSession, rdd: RDD[T])(
+      f: Iterator[T] => U): Array[U] = {
+    rdd.persist(StorageLevel.MEMORY_AND_DISK_SER)
+    if (reliableDir(spark).isDefined) rdd.checkpoint() else rdd.localCheckpoint()
+    spark.sparkContext.runJob(rdd, f)
+  }
 
   /** Eagerly drop the block storage behind a previous [[cut]] result.
     * Fires ONLY when the DataFrame IS a bare cut result (its whole

@@ -74,7 +74,7 @@ object Components extends org.apache.spark.internal.Logging {
     val labels0 = sym.select(col("src").as("id")).distinct()
       .select(col("id"), col("id").as("comp"))
       .transform(Checkpoints.cut)
-    val r = Fixpoint.iterate(labels0, maxIters) { (labels, i) =>
+    val r = Fixpoint.iterate(labels0, maxIters, "components") { (labels, i) =>
       // FUSED round (r16): one union-aggregate computes
       //   comp' = min(comp, min neighbor comp, comp's own comp)
       // and the changed flag, replacing the r15 shape's two label

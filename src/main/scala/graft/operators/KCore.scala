@@ -1,7 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.engine.Fixpoint
 
 /** Fixed-round k-core peeling over an undirected (symmetrized) edge
   * list: each round drops every node whose CURRENT degree is below `k`,
@@ -14,19 +16,26 @@ import org.apache.spark.sql.functions._
   * determinism contract as [[PageRank]] and BFS.
   *
   * Scale shape: the edge list is hash-partitioned on `src` ONCE and
-  * never re-shuffled — each round's degree count is a co-partitioned
-  * `groupBy(src)` (checkpointing preserves the partitioning), and the
-  * peel is expressed as two BROADCAST anti-joins against the REMOVED
-  * node set, not semi-joins against the survivor set: `removed` is the
-  * small side by construction (≤ the nodes that die this round, empty
-  * at convergence), while survivors are O(|V|). A first version
-  * semi-joined survivors and re-shuffled the full edge list every
-  * round — 2.2x over linear at the 20x probe; this formulation moves
-  * only the dying nodes per round. If `k` is chosen so that MOST of
-  * the graph dies in round 1, that round's broadcast is large — run a
-  * coarse pre-filter first in that regime. Lineage is cut per round
-  * through [[graft.engine.Checkpoints]] (localCheckpoint, or reliable
-  * `checkpoint()` under `graft.checkpoint.dir` on a cluster).
+  * never re-shuffled. Each edge row carries its source's degree `deg`,
+  * a co-partitioned window count over `src` (checkpointing preserves
+  * the partitioning). A round keeps the rows whose `deg` is ≥ `k`,
+  * drops the edges INTO the removed nodes with one BROADCAST anti-join
+  * (`removed` — the sources with `deg` < `k` — is the small side by
+  * construction, empty at convergence, while survivors are O(|V|)),
+  * and recounts `deg`. A first version semi-joined survivors and
+  * re-shuffled the full edge list every round — 2.2x over linear at
+  * the 20x probe; this formulation moves only the dying nodes per
+  * round. If `k` is chosen so that MOST of the graph dies in round 1,
+  * that round's broadcast is large — run a coarse pre-filter first in
+  * that regime.
+  *
+  * The rounds run on [[graft.engine.Fixpoint]]: a lineage cut per
+  * round (localCheckpoint, or reliable `checkpoint()` under
+  * `graft.checkpoint.dir` on a cluster), and an early stop. A round's
+  * changed rows are the edges it leaves with `deg` < `k` — the ones the
+  * NEXT round removes — counted on the cut's own job; when there are
+  * none, every later round is the identity, so stopping returns the
+  * fixed-round result exactly.
   */
 object KCore {
 
@@ -43,31 +52,20 @@ object KCore {
   def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(rounds >= 1, "rounds must be >= 1")
-    var e = edges
+    val bySrc = Window.partitionBy(col("src"))
+    val e0 = edges
       .select(col("src").cast("long").as("src"),
         col("dst").cast("long").as("dst"))
       .repartition(col("src"))
-    var converged = false
-    for (_ <- 1 to rounds if !converged) {
-      val removed = e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") < k)
-        .select(col("src").as("rn"))
-        .persist()
-      // an empty removed set makes this and every later round the
-      // identity — stop materializing 0-row peels (the result is BY
-      // DEFINITION what running the remaining rounds would produce,
-      // so the fixed-round determinism contract is untouched)
-      if (removed.isEmpty) converged = true
-      else {
-        val next = graft.engine.Checkpoints.cut(
-          e.join(broadcast(removed), col("src") === col("rn"), "left_anti")
-            .join(broadcast(removed), col("dst") === col("rn"), "left_anti"))
-        graft.engine.Checkpoints.release(e) // round N-1 edge blocks
-        e = next
-      }
-      removed.unpersist()
-    }
-    e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
+      .withColumn("deg", count(lit(1)).over(bySrc))
+    val core = Fixpoint.iterate(e0, rounds, "kcore") { (e, _) =>
+      val removed = e.filter(col("deg") < k).select(col("src").as("rn"))
+      e.filter(col("deg") >= k)
+        .join(broadcast(removed), col("dst") === col("rn"), "left_anti")
+        .withColumn("deg", count(lit(1)).over(bySrc))
+        .withColumn(Fixpoint.Changed, col("deg") < k)
+    }.state
+    core.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
   }
 }

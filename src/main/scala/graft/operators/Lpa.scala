@@ -58,7 +58,7 @@ object Lpa {
     // moving in round 5, so the exit never fired). Relax/Components
     // keep their exits because there the check rides a join the round
     // pays anyway.
-    val labels = Fixpoint.iterate(labels0, iterations) { (prev, i) =>
+    val labels = Fixpoint.iterate(labels0, iterations, "lpa") { (prev, i) =>
       // round-1 identity shortcut: the initial labels are the identity
       // over exactly the e_src domain, so the first vote join IS the
       // pinned edge list with lbl = e_src — no |V|⋈|E| join and no

@@ -67,7 +67,7 @@ object PageRank {
     // pipelining than the saved block write gains).
     val ranks0 = ew.select(col("e_src").as("node")).distinct()
       .select(col("node"), lit(Scale).as("r"))
-    val ranks = Fixpoint.iterate(ranks0, iterations) { (prev, i) =>
+    val ranks = Fixpoint.iterate(ranks0, iterations, "pagerank") { (prev, i) =>
       // round-1 identity shortcut: the initial ranks are uniformly
       // Scale over exactly the e_src domain, so the first join with
       // them IS the pinned edge list — contribution Scale div d per
@@ -118,7 +118,7 @@ object PageRank {
       .otherwise(lit(0L))
     val ranks0 = nodes.select(col("node"),
       when(col("node") === source, lit(Scale)).otherwise(lit(0L)).as("r"))
-    val ranks = Fixpoint.iterate(ranks0, iterations) { (prev, i) =>
+    val ranks = Fixpoint.iterate(ranks0, iterations, "pagerank") { (prev, i) =>
       // round-1 identity shortcut: initial rank is Scale at `source`
       // and 0 elsewhere, so the first join reduces to the source's own
       // out-edges. Later rounds drop rank-0 rows before the join — a
@@ -190,7 +190,7 @@ object PageRank {
       .select(col("node").as("dn"))
       .persist()
     val ranks0 = nodes.select(col("node"), lit(Scale).as("r"))
-    val ranks = Fixpoint.iterate(ranks0, iterations) { (prev, i) =>
+    val ranks = Fixpoint.iterate(ranks0, iterations, "pagerank") { (prev, i) =>
       // round-1 identity shortcuts: uniform initial ranks make the
       // first contribution join the pinned edge list itself, and the
       // first dangling sum |dangNodes|·Scale — no rank join either.

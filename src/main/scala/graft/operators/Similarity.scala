@@ -86,7 +86,7 @@ object Similarity {
       iters: Int): DataFrame = {
     val centroids0 = c.orderBy("cid").limit(nCentroids)
       .select(col("cid").as("ctr"), col("cv").as("cvec"))
-    graft.engine.Fixpoint.iterate(centroids0, iters) { (centroids, _) =>
+    graft.engine.Fixpoint.iterate(centroids0, iters, "kmeans") { (centroids, _) =>
       nearest1(c, centroids, "cid", "cv", Seq("cv"), "actr")
         .select(col("actr").as("ctr"), posexplode(col("cv")))
         .groupBy(col("ctr"), col("pos")).agg(avg(col("col")).as("m"))
@@ -523,7 +523,7 @@ object Similarity {
     val sub = subVectors(c, "cid", "cv", m, dsub, "sv")
     val cb0 = subVectors(c.orderBy("cid").limit(ksub), "cid", "cv", m, dsub, "sv")
       .select(col("sub"), col("cid").as("code"), col("sv").as("cvec"))
-    val cb = graft.engine.Fixpoint.iterate(cb0, iters) { (cb, _) =>
+    val cb = graft.engine.Fixpoint.iterate(cb0, iters, "pq") { (cb, _) =>
       sub.join(broadcast(cb), Seq("sub"))
         .groupBy(col("cid"), col("sub"))
         .agg(min(struct(l2Dist(col("sv"), col("cvec")).as("d"),

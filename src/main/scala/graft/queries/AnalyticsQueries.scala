@@ -38,6 +38,37 @@ object AnalyticsQueries {
         struct(col("su").as("src"), col("c").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
 
+  /** The co-purchase graph of the relaxation queries: distinct (u, v)
+    * part pairs bought in one order, u ≠ v (symmetric by construction).
+    */
+  private def coOrderPairs(li: DataFrame): DataFrame = {
+    val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
+    val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
+    a.join(b, Seq("k")).filter(col("u") =!= col("v"))
+      .select(col("u"), col("v")).distinct()
+  }
+
+  /** The (node, dd) rows `node` reaches on the symmetric co-order graph
+    * in `iterations` relaxation rounds. The oracles seed `node` only
+    * when it is in the graph; a seed with an edge reaches a neighbour
+    * in round 1, so a lone reached row is an isolated seed and yields
+    * nothing.
+    */
+  private def reachedFrom(s: SparkSession, edges: DataFrame, node: Long,
+      iterations: Int, weighted: Boolean): DataFrame =
+    graft.operators.Relax
+      .rounds(edges, s.range(1).select(lit(node).as("node"), lit(0L).as("dd")),
+        iterations, weighted)
+      .filter(col("dd") =!= Long.MaxValue)
+      .withColumn("_n", count(lit(1)).over()).filter(col("_n") > 1).drop("_n")
+
+  /** The least `u` of an edge list as a relaxation seed row (none when
+    * the list is empty).
+    */
+  private def leastSeed(edges: DataFrame): DataFrame =
+    edges.agg(min(col("u")).as("node")).filter(col("node").isNotNull)
+      .select(col("node"), lit(0L).as("dd"))
+
   /** Synthetic media table per sf dir, generated once per JVM and kept
     * persisted: the PNG/WAV/AVI byte ASSEMBLY is test-fixture input
     * fabrication (a real pipeline reads existing media bytes), so it
@@ -901,28 +932,17 @@ object AnalyticsQueries {
     // from the subgraph's lowest part node, on the 1/16-subsampled
     // co-order part graph — per-distance node counts + an id checksum
     "q376_bfs_twin" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 16 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-      val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-      val e0 = a.join(b, Seq("k")).filter(col("u") =!= col("v"))
-        .select(col("u"), col("v")).distinct()
-        .repartition(col("u")).persist()
-      val seed = e0.agg(min(col("u"))).collect()(0).getLong(0)
-      val dist0 = e0.select(col("u")).distinct()
-        .select(col("u").as("node"),
-          when(col("u") === seed, 0L).otherwise(lit(Long.MaxValue))
-            .as("dd"))
+      // the edge build is read twice (seed, adjacency): pinned once
+      val e0 = coOrderPairs(t(s, d, "lineitem")
+        .filter(col("l_orderkey") % 16 === 0)).persist()
       val dist = graft.operators.Relax
-        .rounds(e0, dist0, iterations = 2, weighted = false)
-      val out = dist.filter(col("dd") =!= Long.MaxValue)
+        .rounds(e0, leastSeed(e0), iterations = 2, weighted = false)
+      e0.unpersist()
+      dist.filter(col("dd") =!= Long.MaxValue)
         .groupBy(col("dd").as("dist"))
         .agg(count(lit(1)).as("n_nodes"),
           expr("bit_xor(node)").as("node_xor"))
         .orderBy("dist")
-      e0.unpersist()
-      out
     }),
 
     // sf1-gate twin of q132 (round-15 task 4): the SAME degree-ordered
@@ -969,22 +989,13 @@ object AnalyticsQueries {
     // seeded at the subgraph's LOWEST node (q376's seed rule — the
     // fixed node 1 need not survive the subsample)
     "q382_sssp_twin" -> ((s, d) => {
-      val li = t(s, d, "lineitem")
-        .filter(col("l_orderkey") % 16 === 0)
-        .select(col("l_orderkey"), col("l_partkey"))
-      val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-      val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-      val e0 = a.join(b, Seq("k")).filter(col("u") =!= col("v"))
-        .select(col("u"), col("v")).distinct()
+      // the edge build is read twice (seed, adjacency): pinned once
+      val e0 = coOrderPairs(t(s, d, "lineitem")
+          .filter(col("l_orderkey") % 16 === 0))
         .withColumn("w", pmod(col("u") + col("v"), lit(97L)) + lit(1L))
-        .repartition(col("u")).persist()
-      val seed = e0.agg(min(col("u"))).collect()(0).getLong(0)
-      val dist0 = e0.select(col("u")).distinct()
-        .select(col("u").as("node"),
-          when(col("u") === seed, 0L).otherwise(lit(Long.MaxValue))
-            .as("dd"))
+        .persist()
       val dist = graft.operators.Relax
-        .rounds(e0, dist0, iterations = 2, weighted = true)
+        .rounds(e0, leastSeed(e0), iterations = 2, weighted = true)
       e0.unpersist()
       dist.filter(col("dd") =!= Long.MaxValue)
         .orderBy(col("dd"), col("node")).limit(25)
@@ -2345,23 +2356,9 @@ object AnalyticsQueries {
     // one min-groupBy per hop, all-integer state, which is what makes
     // an ITERATIVE traversal CTE-oracle-checkable (q125's design)
     "q140_bfs" -> ((s, d) => {
-      val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-      val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-      // the expensive self-join + distinct is pinned ONCE, partitioned
-      // on the per-hop join key — otherwise every relaxation (and the
-      // seed) replays the edge build (q125's edge-pinning pattern;
-      // 10 s -> ~2 s at sf0.1)
-      val e0 = a.join(b, Seq("k")).filter(col("u") =!= col("v"))
-        .select(col("u"), col("v")).distinct()
-        .repartition(col("u")).persist()
-      val dist0 = e0.select(col("u")).distinct()
-        .select(col("u").as("node"),
-          when(col("u") === 1L, 0L).otherwise(lit(Long.MaxValue)).as("dd"))
-      val dist = graft.operators.Relax
-        .rounds(e0, dist0, iterations = 4, weighted = false)
-      e0.unpersist() // dist is materialized by the final lineage cut
-      dist.filter(col("dd") =!= Long.MaxValue)
+      // Relax reads the edge build once, into its own adjacency
+      reachedFrom(s, coOrderPairs(t(s, d, "lineitem")), 1L,
+          iterations = 4, weighted = false)
         .groupBy(col("dd")).agg(count(lit(1)).as("n_nodes"))
         .orderBy("dd")
     }),
@@ -3270,20 +3267,9 @@ object AnalyticsQueries {
     // once on the join key, all-integer state so the unrolled CTE
     // oracle re-executes the relaxation exactly
     "q179_sssp" -> ((s, d) => {
-      val li = t(s, d, "lineitem").select(col("l_orderkey"), col("l_partkey"))
-      val a = li.select(col("l_orderkey").as("k"), col("l_partkey").as("u"))
-      val b = li.select(col("l_orderkey").as("k"), col("l_partkey").as("v"))
-      val e0 = a.join(b, Seq("k")).filter(col("u") =!= col("v"))
-        .select(col("u"), col("v")).distinct()
+      val e0 = coOrderPairs(t(s, d, "lineitem"))
         .withColumn("w", pmod(col("u") + col("v"), lit(97L)) + lit(1L))
-        .repartition(col("u")).persist()
-      val dist0 = e0.select(col("u")).distinct()
-        .select(col("u").as("node"),
-          when(col("u") === 1L, 0L).otherwise(lit(Long.MaxValue)).as("dd"))
-      val dist = graft.operators.Relax
-        .rounds(e0, dist0, iterations = 4, weighted = true)
-      e0.unpersist() // dist is materialized by the final lineage cut
-      dist.filter(col("dd") =!= Long.MaxValue)
+      reachedFrom(s, e0, 1L, iterations = 4, weighted = true)
         .orderBy(col("dd"), col("node")).limit(25)
     }),
 

@@ -53,4 +53,22 @@ object GraftBridge {
         classic.Dataset.ofRows(spark, plan)
       case _ => df
     }
+
+  /** A DataFrame whose whole analyzed plan is one `LogicalRDD` leaf over
+    * `rows` — the shape a checkpoint leaves, so
+    * [[graft.engine.Checkpoints.release]] frees `rows` when it is a
+    * persisted cut. `rowCount` (known from the cut's own job) sets the
+    * leaf's statistics, so later planning can still broadcast it.
+    */
+  def rowsFrame(spark: SparkSession,
+      rows: org.apache.spark.rdd.RDD[catalyst.InternalRow],
+      schema: types.StructType, rowCount: Long): Dataset[Row] = {
+    val s = spark.asInstanceOf[classic.SparkSession]
+    val output = catalyst.types.DataTypeUtils.toAttributes(schema)
+    val stats = catalyst.plans.logical.Statistics(
+      sizeInBytes = BigInt(rowCount) *
+        catalyst.plans.logical.statsEstimation.EstimationUtils.getSizePerRow(output),
+      rowCount = Some(BigInt(rowCount)))
+    classic.Dataset.ofRows(s, new execution.LogicalRDD(output, rows)(s, Some(stats), None))
+  }
 }

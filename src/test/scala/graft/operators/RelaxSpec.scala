@@ -65,22 +65,87 @@ class RelaxSpec extends SparkSpec {
     assert(got.filter(_._1 >= 10L).forall(_._2 == Long.MaxValue))
   }
 
-  test("PRECONDITION counter-example: a target absent from dist0 is dropped") {
-    // rounds() refreshes dist via a LEFT join, so it can only ever
-    // UPDATE nodes already present in dist0 — the documented 'every
-    // edge target must appear in dist0' precondition. On an ASYMMETRIC
-    // edge list whose target never appears as a source, the inlined
-    // union+groupBy reference GROWS the node set while rounds() does
-    // not: this pin makes the divergence explicit rather than silent.
-    val e0 = Seq((1L, 2L)).toDF("u", "v").withColumn("w", lit(1L))
-    val dist0 = Seq((1L, 0L)).toDF("node", "dd") // node 2 NOT seeded
-    val got = rows(Relax.rounds(e0, dist0, 2, weighted = false))
-    val want = rows(reference(e0, dist0, 2, weighted = false))
-    assert(got == Seq((1L, 0L)), "relaxation onto unseeded node 2 is dropped")
-    assert(want == Seq((1L, 0L), (2L, 1L)), "the reference would grow the set")
-    // seeding the full node universe restores equivalence
-    val distFull = Seq((1L, 0L), (2L, Long.MaxValue)).toDF("node", "dd")
-    assert(rows(Relax.rounds(e0, distFull, 2, weighted = false)) ==
-      rows(reference(e0, distFull, 2, weighted = false)))
+  test("an asymmetric edge list grows the node set as the reference does") {
+    // node 2 is an edge target absent from dist0: a relaxation onto it
+    // adds it to the result, unit and weighted, as the union+groupBy
+    // reference does
+    val e0 = Seq((1L, 2L, 5L)).toDF("u", "v", "w")
+    val dist0 = Seq((1L, 0L)).toDF("node", "dd")
+    for (weighted <- Seq(false, true); iters <- Seq(1, 2)) {
+      val got = rows(Relax.rounds(e0, dist0, iters, weighted))
+      assert(got == rows(reference(e0, dist0, iters, weighted)),
+        s"weighted=$weighted iters=$iters")
+      assert(got == Seq((1L, 0L), (2L, if (weighted) 5L else 1L)))
+    }
+  }
+
+  test("weighted asymmetric graph == reference at every round count") {
+    // a random directed graph: targets outside dist0, a duplicate seed
+    // row, unreached seeds and edges out of unreached nodes
+    val rnd = new scala.util.Random(7)
+    val e0 = Seq.fill(160)((rnd.nextInt(40).toLong, rnd.nextInt(40).toLong,
+        rnd.nextInt(20) + 1L))
+      .filter(e => e._1 != e._2).toDF("u", "v", "w")
+    val dist0 = (Seq((0L, 0L), (0L, 3L), (5L, 7L)) ++
+        (10L to 30L by 4).map(n => (n, Long.MaxValue)))
+      .toDF("node", "dd")
+    for (weighted <- Seq(true, false); iters <- 1 to 6) {
+      val got = rows(Relax.rounds(e0, dist0, iters, weighted))
+      assert(got == rows(reference(e0, dist0, iters, weighted)),
+        s"weighted=$weighted iters=$iters")
+    }
+  }
+
+  test("one Spark job per relaxation round plus a fixed setup count") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import graft.engine.{Checkpoints, Fixpoint}
+    val (e0, dist0) = graph()
+    val sc = spark.sparkContext
+    /** The result and each job's (operator, round) tags. */
+    def traced(iters: Int): (Fixpoint.Result, Seq[(String, String)]) = {
+      val tags = new java.util.concurrent.ConcurrentLinkedQueue[(String, String)]()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = {
+          val p = Option(e.properties).getOrElse(new java.util.Properties)
+          tags.add((p.getProperty(Fixpoint.OperatorProp),
+            p.getProperty(Fixpoint.RoundProp)))
+        }
+      }
+      sc.addSparkListener(listener)
+      try {
+        val r = Relax.fixpoint(e0, dist0, iters, weighted = false)
+        org.apache.spark.SpecBridge.drainListeners(sc)
+        Checkpoints.release(r.state)
+        (r, tags.asScala.toSeq)
+      } finally sc.removeSparkListener(listener)
+    }
+    // the seed is 3 hops from its farthest node: 2 and 3 rounds both
+    // change distances in every round
+    val (r2, jobs2) = traced(2)
+    val (r3, jobs3) = traced(3)
+    assert(r2.rounds == 2 && r3.rounds == 3 && !r2.converged && !r3.converged)
+    assert(jobs3.forall(_._1 == "relax"), jobs3)
+    for (i <- 1 to 3)
+      assert(jobs3.count(_._2 == i.toString) == 1, s"round $i: $jobs3")
+    // everything untagged by a round is setup and result: one more
+    // round costs exactly one more job
+    assert(jobs3.count(_._2 == "0") == jobs2.count(_._2 == "0"), s"$jobs2 vs $jobs3")
+    assert(jobs3.size == jobs2.size + 1, s"$jobs2 vs $jobs3")
+  }
+
+  test("reliable checkpoint path (graft.checkpoint.dir) gives identical distances") {
+    val (e0, dist0) = graph()
+    val default = rows(Relax.rounds(e0, dist0, 4, weighted = true))
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+    spark.conf.set(graft.engine.Checkpoints.ConfKey, dir)
+    try {
+      val reliable = rows(Relax.rounds(e0, dist0, 4, weighted = true))
+      assert(reliable == default)
+      // the reliable path must actually have checkpointed into the dir
+      val wrote = java.nio.file.Files.walk(java.nio.file.Paths.get(dir))
+        .filter(java.nio.file.Files.isRegularFile(_)).count()
+      assert(wrote > 0, s"no checkpoint files under $dir")
+    } finally spark.conf.unset(graft.engine.Checkpoints.ConfKey)
   }
 }
