@@ -1,6 +1,6 @@
 package graft.cli
 
-import graft.engine.{Config, Flows, Sessions}
+import graft.engine.{Config, Flows, Scratch, Sessions}
 
 /** CLI entry point mirroring the reference's `rabbithole config.yml`
   * (reference cli.py:35-70, 190-244): positional YAML config,
@@ -98,7 +98,7 @@ object Main {
     org.apache.logging.log4j.core.config.Configurator.setLevel("graft",
       org.apache.logging.log4j.Level.toLevel(graftLevel))
     val checkpoint = if (args.checkpoint.nonEmpty) args.checkpoint
-      else java.nio.file.Files.createTempDirectory("graft-ckpt").toString
+      else Scratch.dir("ckpt")
     val queries = Flows.start(spark, cfg, checkpoint)
     System.err.println(s"started ${queries.size} flow(s); Ctrl-C to stop")
     installSigint(queries)

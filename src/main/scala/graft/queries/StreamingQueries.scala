@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 import org.apache.spark.sql.types.{BinaryType, DoubleType, LongType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 
+import graft.engine.Scratch
+
 /** Streaming twins of the batch inventory (SURVEY §2.3 Q23 / §5.3 item 4):
   * the same aggregation executed through Structured Streaming from a file
   * source must match the batch oracle exactly.
@@ -92,42 +94,6 @@ object StreamingQueries {
     if (isDir(dir, "documents")) s.read.parquet(s"$dir/documents.parquet")
     else s.read.option("pathGlobFilter", "documents.parquet").parquet(dir)
 
-  /** Every scratch dir lives under tmpfs (/dev/shm) when available
-    * instead of a disk-backed /tmp: the offset/commit logs and
-    * state-store files fsync per micro-batch, and stores and outputs
-    * are read once and discarded — durability buys nothing here.
-    * (Production streams pass a real, durable checkpointLocation.)
-    */
-  private[queries] val scratchBase: java.nio.file.Path = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
-    if (java.nio.file.Files.isDirectory(shm)) shm
-    else java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"))
-  }
-
-  private val scratchDirs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-  Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    scratchDirs.forEach(d => deleteRecursively(d))))
-
-  /** A fresh `graft-<tag>-*` dir under [[scratchBase]], deleted
-    * recursively at JVM exit: the DataFrames the queries return read
-    * their stores and outputs lazily, and the per-JVM fixtures are
-    * shared across calls, so no earlier point is safe.
-    */
-  private def scratchDir(tag: String): String = {
-    val dir = java.nio.file.Files.createTempDirectory(scratchBase, s"graft-$tag-").toString
-    scratchDirs.add(dir)
-    dir
-  }
-
-  private def deleteRecursively(dir: String): Unit = {
-    import java.nio.file.{Files, Paths}
-    import scala.jdk.CollectionConverters._
-    val p = Paths.get(dir)
-    if (Files.exists(p))
-      Files.walk(p).iterator().asScala.toSeq.reverse
-        .foreach(f => Files.deleteIfExists(f))
-  }
-
   /** Runs `f` with the session conf `key` set to `value`, restoring the
     * prior setting afterwards, also when `f` throws.
     */
@@ -155,9 +121,9 @@ object StreamingQueries {
     * checkpoint runs both drains inside one scope.
     */
   private[queries] def withCheckpoint[T](s: SparkSession, tag: String)(f: String => T): T = {
-    val ckpt = scratchDir(tag)
+    val ckpt = Scratch.dir(tag)
     try withConf(s, "spark.sql.shuffle.partitions", StatePartitions.toString)(f(ckpt))
-    finally deleteRecursively(ckpt)
+    finally Scratch.delete(ckpt)
   }
 
   /** Runs `w` under `Trigger.AvailableNow` at checkpoint `ckpt`: every
@@ -195,9 +161,8 @@ object StreamingQueries {
     * [[tsTimestamp]] on the two ts layouts), so the flush stream and
     * the events stream union cleanly.
     */
-  private def sentinelDir(s: SparkSession, raw: StructType,
-      tsMicrosVal: Long): String = {
-    val dir = scratchDir("sentinel")
+  private def writeSentinel(s: SparkSession, raw: StructType,
+      tsMicrosVal: Long, dir: String): Unit = {
     import scala.jdk.CollectionConverters._
     val tsVal: Any = raw("ts").dataType match {
       case LongType => tsMicrosVal * 1000L // nanosAsLong layout
@@ -218,7 +183,6 @@ object StreamingQueries {
     })
     s.createDataFrame(Seq(row).asJava, raw)
       .coalesce(1).write.mode("overwrite").parquet(dir)
-    dir
   }
 
   private val FourHoursMicros = 4L * 3600 * 1000 * 1000
@@ -228,19 +192,17 @@ object StreamingQueries {
     * are fixed costs of the flush pattern, not of an individual query
     * run.
     */
-  private val sentinelCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def sentinelFor(s: SparkSession, dir: String): String =
-    sentinelCache.computeIfAbsent(dir, { d =>
-      val raw = eventsSchema(s, d)
+    Scratch.once("sentinel", dir) { out =>
+      val raw = eventsSchema(s, dir)
       val maxTs = s.read.schema(raw)
-        .parquet(s"$d/events.parquet").agg(max(tsMicros(raw)))
+        .parquet(s"$dir/events.parquet").agg(max(tsMicros(raw)))
         .head.getLong(0)
-      sentinelDir(s, raw, maxTs + FourHoursMicros)
-    })
+      writeSentinel(s, raw, maxTs + FourHoursMicros, out)
+    }
 
   /** The events stream unioned with the sentinel flush stream
-    * ([[sentinelDir]]). NOTE the sentinel must NOT be filtered inside
+    * ([[writeSentinel]]). NOTE the sentinel must NOT be filtered inside
     * the stream: a `user_id =!= -1` gets PUSHED INTO the parquet scan,
     * whose row-group stats (min=max=-1) then skip the sentinel file
     * entirely — the row never reaches the EventTimeWatermark node and
@@ -538,12 +500,9 @@ object StreamingQueries {
     * `tso` = days·10⁹ + orderkey: unique per entry, so latest-per-key
     * is well-defined on any engine.
     */
-  private val cdcLogCache =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def cdcLogDir(s: SparkSession, dir: String): String =
-    cdcLogCache.computeIfAbsent(dir, { d =>
-      val tmp = scratchDir("q274-log")
-      graft.engine.Tables(s, d, "orders")
+    Scratch.once("q274-log", dir) { tmp =>
+      graft.engine.Tables(s, dir, "orders")
         .filter(col("o_orderkey") % 5 === 0)
         .select(col("o_custkey").as("k"),
           (datediff(col("o_orderdate").cast("date"),
@@ -555,8 +514,7 @@ object StreamingQueries {
           expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").as("cents"))
         .repartitionByRange(4, col("tso"))
         .write.mode("overwrite").parquet(tmp)
-      tmp
-    })
+    }
 
   /** Retraction-aware incremental view maintenance driven end-to-end:
     * the orders CDC log streams through [[graft.streaming
@@ -571,7 +529,7 @@ object StreamingQueries {
     */
   def q274IvmRetract(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q274_ivm_retract") { ckpt =>
-      val store = scratchDir("q274-store")
+      val store = Scratch.dir("q274-store")
       val schema = StructType(Seq(
         StructField("k", LongType), StructField("tso", LongType),
         StructField("op", StringType), StructField("grp", LongType),
@@ -892,7 +850,7 @@ object StreamingQueries {
   def q227StreamUpsert(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q227_stream_upsert") { ckpt =>
       val raw = eventsSchema(s, dir)
-      val store = scratchDir("q227-store")
+      val store = Scratch.dir("q227-store")
       drain(ckpt)(eventsStream(s, dir, raw)
         .withColumn("sec", tsSeconds(raw))
         .writeStream
@@ -916,7 +874,7 @@ object StreamingQueries {
   def q106IncrementalView(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q106_incremental_view") { ckpt =>
       val raw = eventsSchema(s, dir)
-      val store = scratchDir("q106-store")
+      val store = Scratch.dir("q106-store")
       drain(ckpt)(eventsStream(s, dir, raw).writeStream
         .foreachBatch(graft.streaming.IncrementalAgg
           .mergeCountSum(store, Seq("event_type"), "value") _))
@@ -1089,8 +1047,8 @@ object StreamingQueries {
   def q196StreamZonemap(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q196_stream_zonemap") { ckpt =>
       val raw = eventsSchema(s, dir)
-      val dataDir = scratchDir("q196-data")
-      val statsDir = scratchDir("q196-stats")
+      val dataDir = Scratch.dir("q196-data")
+      val statsDir = Scratch.dir("q196-stats")
       drain(ckpt)(eventsStream(s, dir, raw)
         .select(col("event_id"), col("user_id"), col("value"))
         .writeStream
@@ -1197,7 +1155,7 @@ object StreamingQueries {
     */
   def q313StreamTxlog(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q313_stream_txlog") { ckpt =>
-      val tdir = scratchDir("q313-table")
+      val tdir = Scratch.dir("q313-table")
       drain(ckpt)(centsStream(s, dir).writeStream
         .foreachBatch { (df: DataFrame, batchId: Long) =>
           val v = batchId.toInt + 1
@@ -1224,13 +1182,13 @@ object StreamingQueries {
     */
   def q361StreamTxlogSink(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q361_stream_txlog_sink") { ckpt =>
-      val tdir = scratchDir("q361-table")
+      val tdir = Scratch.dir("q361-table")
       def drainToTxlog(): Unit =
         drain(ckpt)(centsStream(s, dir).writeStream
           .format("txlog").option("path", tdir))
       drainToTxlog()
       val v1 = graft.operators.TxTable.currentVersion(tdir)
-      deleteRecursively(ckpt) // wipe the checkpoint: full replay
+      Scratch.delete(ckpt) // wipe the checkpoint: full replay
       drainToTxlog()
       require(graft.operators.TxTable.currentVersion(tdir) == v1,
         "a replayed batch must not even commit a version")
@@ -1250,7 +1208,7 @@ object StreamingQueries {
   def q367StreamTxlogSource(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q367_stream_txlog_source") { ckpt =>
       val T = graft.operators.TxTable
-      val tdir = scratchDir("q367-table")
+      val tdir = Scratch.dir("q367-table")
       val docs = graft.engine.Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
       T.commitAppend(docs.filter(col("doc_id") % 3 === 0), tdir)
@@ -1307,8 +1265,8 @@ object StreamingQueries {
   def q372StreamAutoCompact(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q372_stream_autocompact") { ckpt =>
       val T = graft.operators.TxTable
-      val src = scratchDir("q372-src")
-      val sink = scratchDir("q372-sink")
+      val src = Scratch.dir("q372-src")
+      val sink = Scratch.dir("q372-sink")
       val docs = graft.engine.Tables(s, dir, "documents")
         .select(col("doc_id"), col("text"), col("lang"))
       (0 to 5).foreach(i =>
@@ -1411,7 +1369,7 @@ object StreamingQueries {
   def q335StreamTokenize(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q335_stream_tokenize") { ckpt =>
       val pieces = AnalyticsQueries.unigramPieces(s, dir)
-      val out = scratchDir("q335-tokens")
+      val out = Scratch.dir("q335-tokens")
       drain(ckpt)(docsStream(s, dir).writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           graft.operators.Unigram
@@ -1445,7 +1403,7 @@ object StreamingQueries {
       val merges = graft.operators.Bpe
         .train(docsStatic(s, dir), "text", numMerges = 48)
         .map { case (l, r, _) => (l, r) }
-      val out = scratchDir("q345-tokens")
+      val out = Scratch.dir("q345-tokens")
       drain(ckpt)(docsStream(s, dir).writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           graft.operators.Bpe
@@ -1470,7 +1428,7 @@ object StreamingQueries {
     */
   def q349StreamGdpr(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q349_stream_gdpr") { ckpt =>
-      val tdir = scratchDir("q349-table")
+      val tdir = Scratch.dir("q349-table")
       graft.operators.TxTable.commitAppend(
         docsStatic(s, dir).select(col("doc_id"), col("text"), col("lang"))
           .repartitionByRange(4, col("doc_id")), tdir)
@@ -1515,7 +1473,7 @@ object StreamingQueries {
   def q337StreamPerplexity(s: SparkSession, dir: String): DataFrame =
     withCheckpoint(s, "q337_stream_perplexity") { ckpt =>
       val pieces = AnalyticsQueries.unigramPieces(s, dir)
-      val out = scratchDir("q337-scores")
+      val out = Scratch.dir("q337-scores")
       drain(ckpt)(docsStream(s, dir).writeStream
         .foreachBatch { (batch: DataFrame, id: Long) =>
           graft.operators.Unigram

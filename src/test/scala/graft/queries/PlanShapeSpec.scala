@@ -301,7 +301,10 @@ class PlanShapeSpec extends SparkSpec {
     // q136's explode-to-target-days MUST stay a pure equi plan (the
     // naive formulation is a range join -> BNLJ); q139's two unigram
     // joins and q134/q133's window plans must stay equi/shuffle-free
-    // of nested loops; q140's per-hop relaxation join must stay equi.
+    // of nested loops. q140's relaxation rounds run as an RDD superstep
+    // (RelaxSpec's one-job-per-round case pins them), so its SQL plan
+    // holds only the coOrderPairs edge build and the final aggregate:
+    // this leg pins that the edge build's self-join stays equi.
     // q139's corpus-size N rides the plan as a ONE-ROW broadcast cross
     // join — the intended scalar pattern (q113/q116/q122 exemption),
     // not a degenerate join.

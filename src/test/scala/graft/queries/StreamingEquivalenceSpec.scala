@@ -48,7 +48,7 @@ class StreamingEquivalenceSpec extends SparkSpec {
     assert(before != "8", "the session count must differ from the drain's")
     val tag = s"failing-drain-${System.nanoTime()}"
     def leftovers(): List[String] =
-      java.nio.file.Files.list(StreamingQueries.scratchBase).iterator().asScala
+      java.nio.file.Files.list(graft.engine.Scratch.root).iterator().asScala
         .map(_.getFileName.toString).filter(_.startsWith(s"graft-$tag-")).toList
     val events = spark.readStream
       .schema(spark.read.parquet(s"$sf/events.parquet").schema)
